@@ -26,6 +26,7 @@ import urllib.request
 
 sys.path.insert(0, ".")
 
+from bench import _evict
 from twitter_kafka_etl_spark.plans import REGISTRY
 from twitter_kafka_etl_spark.session import get_spark
 
@@ -37,16 +38,6 @@ def _api(base: str, path: str):
 
 def _noop(df):
     df.write.format("noop").mode("overwrite").save()
-
-
-def _evict(spark):
-    spark.catalog.clearCache()
-    try:
-        for rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).values():
-            rdd.unpersist(True)
-        spark.sparkContext._jvm.System.gc()
-    except Exception:  # noqa: BLE001
-        pass
 
 
 def main() -> int:

@@ -1,10 +1,14 @@
-"""Side-state compaction invariants (streaming/side_state.py): content
-preservation, tiered write-amplification bounds, replay safety, the
-checksum gate, and intent-journal crash roll-forward — plus the qs12
-end-to-end equivalence with compaction forced live mid-stream."""
+"""Side-state compaction and manifest visibility (streaming/side_state.py):
+content preservation under folds, tiered write-amplification bounds,
+replay safety, the checksum gate, atomic-publish crash semantics at
+EVERY filesystem step, torn manifests, torn published snapshots, replay
+idempotence, the pure tiered-merge planning bounds (hypothesis, no
+Spark), and the end-to-end oracle equivalence of every ingest fold with
+compaction forced live mid-stream."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pytest
@@ -19,52 +23,71 @@ def _write_delta(spark, path: str, b: int, lo: int, n: int) -> None:
     ).write.mode("overwrite").parquet(os.path.join(path, f"__b={b}"))
 
 
-def _content(spark, path: str) -> list[tuple]:
+def _visible(spark, path: str) -> list[tuple]:
     return sorted(
-        (r.k, r.v) for r in spark.read.parquet(path).select("k", "v").collect()
+        (r.k, r.v)
+        for r in S.read_side(spark, path).select("k", "v").collect()
     )
 
 
+def _expected(n_batches: int, per: int = 10) -> list[tuple]:
+    return sorted(
+        (i, hashlib.md5(str(i).encode()).hexdigest())
+        for i in range(n_batches * per)
+    )
+
+
+def _registered(spark, path: str, n_batches: int) -> None:
+    """``n_batches`` committed deltas of 10 rows each, all published."""
+    os.makedirs(path)
+    for b in range(n_batches):
+        _write_delta(spark, path, b, lo=b * 10, n=10)
+        S.register_batch(path, b)
+
+
 def test_compaction_preserves_content_and_bounds_dirs(spark, tmp_path):
-    """Drive 40 batches with every=8: every row written once stays
-    visible exactly once across all folds, the live dir count stays
-    <= every + snapshots, and snapshot generations are negative so the
-    folds' own-batch ``__b != batch_id`` exclusion can never hit one."""
+    """40 batches, every=8: visible content is exactly every row
+    written, live dirs stay bounded, snapshot generations are negative
+    so the folds' own-batch ``__b != batch_id`` exclusion can never hit
+    one, and on-disk garbage does not accumulate (GC keeps the root
+    close to the live set)."""
     path = str(tmp_path / "state")
     os.makedirs(path)
     folds = 0
     for b in range(40):
-        # compaction first, then the batch's own write — the fold-start
-        # call order the ingest callbacks use
+        # compaction first, then the batch's own write and publish —
+        # the fold-start call order the ingest callbacks use
         folds += S.maybe_compact(spark, path, b, every=8)
         _write_delta(spark, path, b, lo=b * 10, n=10)
+        S.register_batch(path, b)
     assert folds >= 3
-    assert _content(spark, path) == sorted(
-        (i, __import__("hashlib").md5(str(i).encode()).hexdigest())
-        for i in range(400)
-    )
-    parts = S._partitions(path)
-    snaps = [b for b in parts if b < 0]
-    deltas = [b for b in parts if b >= 0]
-    assert snaps and len(deltas) < 8 + len(snaps)
+    assert _visible(spark, path) == _expected(40)
+    live = S.live_partitions(path)
+    assert live is not None and len(live) <= 8 + 4
     # tiered bound: snapshot count grows logarithmically, not linearly
-    assert len(snaps) <= 4
+    snaps = [b for b in live if b < 0]
+    assert snaps and len(snaps) <= 4
+    # the root holds live dirs plus at most the in-flight margin —
+    # folded sources are GC'd, not abandoned
+    assert len(S._partitions(path)) <= len(live) + 1
+    # row accounting is manifest-aware
+    assert S.live_rows(path) == 400
 
 
 def test_compaction_never_folds_own_or_future_batch(spark, tmp_path):
     """Replay safety: only strictly-earlier (checkpoint-committed)
-    batches fold. The replaying batch's own leftover partition and any
-    not-yet-committed higher id stay untouched."""
+    batches fold. The replaying batch's own already-published partition
+    and a not-yet-published higher id stay untouched."""
     path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(6):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    before = _content(spark, path)
+    _registered(spark, path, 5)
+    _write_delta(spark, path, 5, lo=50, n=10)  # in flight, unpublished
+    before = _visible(spark, path)
     assert S.maybe_compact(spark, path, batch_id=4, every=2)
-    parts = S._partitions(path)
-    assert 4 in parts and 5 in parts  # own + future: intact
-    assert [b for b in parts if 0 <= b < 4] == []  # earlier: folded
-    assert _content(spark, path) == before
+    live = S.live_partitions(path)
+    assert 4 in live  # own: still live
+    assert [b for b in live if 0 <= b < 4] == []  # earlier: folded
+    assert 5 in S._partitions(path) and 5 not in live  # future: intact
+    assert _visible(spark, path) == before
 
 
 def test_merge_variant_preserves_groupwise_sums(spark, tmp_path):
@@ -78,6 +101,7 @@ def test_merge_variant_preserves_groupwise_sums(spark, tmp_path):
             [(d, c, 1) for d in range(2) for c in range(8)],
             "depth int, cell int, counts long",
         ).write.mode("overwrite").parquet(os.path.join(path, f"__b={b}"))
+        S.register_batch(path, b)
     merge = lambda df: df.groupBy("depth", "cell").agg(  # noqa: E731
         F.sum("counts").alias("counts")
     )
@@ -90,11 +114,11 @@ def test_merge_variant_preserves_groupwise_sums(spark, tmp_path):
     )
     got = {
         (r.depth, r.cell): r.counts
-        for r in merge(spark.read.parquet(path)).collect()
+        for r in merge(S.read_side(spark, path)).collect()
     }
     assert got == {(d, c): 4 for d in range(2) for c in range(8)}
     # merged snapshot is 16 rows, not 64
-    snap = [b for b in S._partitions(path) if b < 0]
+    snap = [b for b in S.live_partitions(path) if b < 0]
     assert len(snap) == 1
     assert spark.read.parquet(
         os.path.join(path, f"__b={snap[0]}")
@@ -103,9 +127,7 @@ def test_merge_variant_preserves_groupwise_sums(spark, tmp_path):
 
 def test_merge_without_invariant_is_refused(spark, tmp_path):
     path = str(tmp_path / "cells")
-    os.makedirs(path)
-    for b in range(3):
-        _write_delta(spark, path, b, lo=0, n=5)
+    _registered(spark, path, 3)
     with pytest.raises(ValueError, match="invariant"):
         S.maybe_compact(
             spark, path, batch_id=3, every=2, merge=lambda df: df
@@ -113,13 +135,13 @@ def test_merge_without_invariant_is_refused(spark, tmp_path):
 
 
 def test_checksum_gate_aborts_and_leaves_sources(spark, tmp_path):
-    """A fold whose merge drops rows goes loudly red BEFORE any source
-    dir is touched — x55's compute-from-the-rewritten-files contract."""
+    """A fold whose merge drops rows goes loudly red BEFORE it is
+    published — x55's compute-from-the-rewritten-files contract: no new
+    manifest generation, no snapshot dir left behind, same content."""
     path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(4):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    before = _content(spark, path)
+    _registered(spark, path, 4)
+    before = _visible(spark, path)
+    gen, _ = S._latest_manifest(path)
     bad_merge = lambda df: df.filter(F.col("k") % 2 == 0)  # noqa: E731
     identity_inv = S._default_invariant  # NOT preserved by bad_merge
     with pytest.raises(RuntimeError, match="content.*invariant"):
@@ -131,76 +153,79 @@ def test_checksum_gate_aborts_and_leaves_sources(spark, tmp_path):
             merge=bad_merge,
             invariant=identity_inv,
         )
-    assert _content(spark, path) == before
+    assert S._latest_manifest(path)[0] == gen
     assert sorted(S._partitions(path)) == [0, 1, 2, 3]
-    assert not os.path.exists(S._tmp_of(path))
+    assert sorted(S.live_partitions(path)) == [0, 1, 2, 3]
+    assert _visible(spark, path) == before
 
 
-def test_journal_roll_forward_after_simulated_crash(spark, tmp_path):
-    """Crash between journal write and swap completion: the next call
-    rolls the swap FORWARD — the snapshot becomes visible, the folded
-    dirs disappear, content is intact. (A crash BEFORE the journal only
-    leaves an orphan tmp, which is swept.)"""
+def test_manifest_protocol_is_rename_free(spark, tmp_path, monkeypatch):
+    """The visibility protocol performs no os.rename: drive a full
+    fold with rename booby-trapped. (Scope per the module docs: this
+    is about the publish/GC protocol — Spark's own parquet committer
+    renames inside a partition write, which is the platform
+    committer's job on a real object store — so the trap arms only
+    around the side_state calls, not the data writes.)"""
+
+    def bomb(*a, **k):
+        raise AssertionError("os.rename in manifest visibility protocol")
+
     path = str(tmp_path / "state")
     os.makedirs(path)
     for b in range(4):
         _write_delta(spark, path, b, lo=b * 10, n=10)
-    before = _content(spark, path)
-    # manufacture the post-journal pre-swap state by hand: verified tmp
-    # + journal, sources still in place
-    union = spark.read.parquet(*[
-        os.path.join(path, f"__b={b}") for b in range(3)
-    ])
-    union.coalesce(1).write.parquet(S._tmp_of(path))
-    S._write_journal(
-        path, {"fold": [f"__b={b}" for b in range(3)], "dest": "__b=-1",
-               "rows": 30}
-    )
-    # any later fold-start call recovers first (here: no new fold runs,
-    # only 1 committed delta remains afterwards)
-    assert S.maybe_compact(spark, path, batch_id=4, every=8) is False
-    parts = S._partitions(path)
-    assert sorted(parts) == [-1, 3]
-    assert _content(spark, path) == before
-    assert not os.path.exists(os.path.join(path, S._JOURNAL))
-    # orphan-tmp variant: crash BEFORE the journal existed — the tmp is
-    # swept, nothing else moves
-    spark.range(3).write.mode("overwrite").parquet(
-        S._tmp_of(path)
-    )
-    assert S.maybe_compact(spark, path, batch_id=4, every=8) is False
-    assert not os.path.exists(S._tmp_of(path))
+        monkeypatch.setattr(S.os, "rename", bomb)
+        S.register_batch(path, b)
+        monkeypatch.setattr(S.os, "rename", os.rename)
+    monkeypatch.setattr(S.os, "rename", bomb)
+    assert S.maybe_compact(spark, path, batch_id=4, every=2)
+    monkeypatch.setattr(S.os, "rename", os.rename)
+    assert _visible(spark, path) == _expected(4)
+    assert [b for b in S.live_partitions(path) if b < 0]
 
 
-def test_crash_at_every_swap_step_preserves_content(
+def test_reader_sees_pre_or_post_fold_at_every_crash_point(
     spark, tmp_path, monkeypatch
 ):
-    """Systematic crash injection: kill the swap at EVERY rename step
-    (one per folded dir — 4 here, with batch_id=4 — plus the tmp→dest
-    rename; the itertools.count loop discovers the total rather than
-    hardcoding it), then recover via the next fold-start call. Whatever
-    the crash point, the table's visible content after recovery equals
-    the pre-fold content — the module's 'no row present zero times or
-    twice' claim, exercised at every reachable interruption, not just
-    one."""
+    """Systematic crash injection over every destructive/commit fs op
+    in the fold (manifest publishes via os.replace, GC/sweep via
+    shutil.rmtree, retention pruning via os.remove). After EVERY crash
+    point, WITHOUT recovery, a reader must see exactly the pre-fold or
+    the post-fold row set, and after the next fold-start call
+    (recovery) the same must hold with the garbage swept."""
     import itertools
 
-    real_rename = os.rename
+    real_replace, real_rmtree, real_remove = (
+        os.replace,
+        S.shutil.rmtree,
+        os.remove,
+    )
+    pre, post = _expected(4), _expected(4)
     for crash_at in itertools.count(1):
         path = str(tmp_path / f"state_{crash_at}")
-        os.makedirs(path)
-        for b in range(4):
-            _write_delta(spark, path, b, lo=b * 10, n=10)
-        before = _content(spark, path)
+        _registered(spark, path, 4)
         calls = {"n": 0}
 
-        def bomb(src, dst, *, _ca=crash_at, _c=calls):
+        def _tick(_c=calls, _ca=crash_at):
             _c["n"] += 1
             if _c["n"] == _ca:
                 raise RuntimeError("injected crash")
-            return real_rename(src, dst)
 
-        monkeypatch.setattr(S.os, "rename", bomb)
+        def bomb_replace(src, dst, *, _t=_tick):
+            _t()
+            return real_replace(src, dst)
+
+        def bomb_rmtree(p, *a, _t=_tick, **k):
+            _t()
+            return real_rmtree(p, *a, **k)
+
+        def bomb_remove(p, *, _t=_tick):
+            _t()
+            return real_remove(p)
+
+        monkeypatch.setattr(S.os, "replace", bomb_replace)
+        monkeypatch.setattr(S.shutil, "rmtree", bomb_rmtree)
+        monkeypatch.setattr(S.os, "remove", bomb_remove)
         try:
             S.maybe_compact(spark, path, batch_id=4, every=2)
             crashed = False
@@ -208,122 +233,207 @@ def test_crash_at_every_swap_step_preserves_content(
             assert "injected crash" in str(e)
             crashed = True
         finally:
-            monkeypatch.setattr(S.os, "rename", real_rename)
-        # recovery = the next fold-start call (no new fold triggers:
-        # at most 1 un-folded delta remains after roll-forward)
+            monkeypatch.setattr(S.os, "replace", real_replace)
+            monkeypatch.setattr(S.shutil, "rmtree", real_rmtree)
+            monkeypatch.setattr(S.os, "remove", real_remove)
+        # no recovery yet: the reader's view is already exactly pre or
+        # post (the publish is the only visibility transition)
+        assert _visible(spark, path) in (pre, post), f"crash {crash_at}"
+        # recovery = the next fold-start call
         S.maybe_compact(spark, path, batch_id=4, every=8)
-        assert _content(spark, path) == before, f"crash point {crash_at}"
-        assert not os.path.exists(os.path.join(path, S._JOURNAL))
-        assert not os.path.exists(S._tmp_of(path))
-        if not crashed:  # rename count exceeded the protocol's total
+        assert _visible(spark, path) in (pre, post), f"crash {crash_at}"
+        live = set((S.live_partitions(path) or {}).values())
+        on_disk = set(S._partitions(path).values())
+        assert on_disk <= live, f"unswept garbage at crash {crash_at}"
+        if not crashed:
             break
 
 
-def test_torn_snapshot_rolls_back_not_forward(spark, tmp_path):
-    """Power-loss emulation: the journal committed but the snapshot's
-    data pages are gone (journaled row count disagrees with the tmp
-    footers). Recovery must roll BACK — sources restored bit-identical,
-    no truncated snapshot installed — including when the crash had
-    already moved some sources into trash."""
+def test_torn_manifest_falls_back_to_previous_generation(spark, tmp_path):
     path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(4):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    before = _content(spark, path)
-    # verified-looking tmp... with a journal claiming MORE rows than
-    # the files hold (= pages lost after the fsync the journal assumed)
-    union = spark.read.parquet(*[
-        os.path.join(path, f"__b={b}") for b in range(3)
-    ])
-    union.coalesce(1).write.parquet(S._tmp_of(path))
-    S._write_journal(
-        path, {"fold": [f"__b={b}" for b in range(3)], "dest": "__b=-1",
-               "rows": 9999}
-    )
-    # one source already in trash: recovery must restore it
-    os.makedirs(S._trash_of(path))
-    os.rename(
-        os.path.join(path, "__b=0"),
-        os.path.join(S._trash_of(path), "__b=0"),
-    )
+    _registered(spark, path, 3)
+    before = _visible(spark, path)
+    gen, _ = S._latest_manifest(path)
+    # a torn local write / truncated PUT: garbage bytes under the next
+    # generation's name — readers must skip it (sha mismatch), not
+    # error and not see a partial part list
+    with open(
+        os.path.join(S._mdir(path), f"m-{gen + 1:012d}.json"), "w"
+    ) as fh:
+        fh.write('{"gen": %d, "parts": ["__b=' % (gen + 1))
+    assert _visible(spark, path) == before
+    # and the writer path keeps going: the next publish overwrites the
+    # torn object deterministically
+    _write_delta(spark, path, 3, lo=30, n=10)
+    S.register_batch(path, 3)
+    assert _visible(spark, path) == _expected(4)
+
+
+def test_torn_published_snapshot_rolls_back_to_sources(
+    spark, tmp_path, monkeypatch
+):
+    """Power-loss emulation in the publish→GC window: the manifest
+    committed (snapshot live, rows recorded) but the snapshot's pages
+    are gone. Recovery must publish a rollback manifest naming the
+    still-present sources — never serve the truncated snapshot."""
+    path = str(tmp_path / "state")
+    _registered(spark, path, 4)
+    before = _visible(spark, path)
+    # crash on the FIRST destructive op after the publish: the fold is
+    # committed, GC never starts, sources intact
+    real_rmtree = S.shutil.rmtree
+    real_publish = S._publish_manifest
+    state = {"published": False}
+
+    def tracking_publish(*a, **k):
+        out = real_publish(*a, **k)
+        state["published"] = True
+        return out
+
+    def bomb_rmtree(p, *a, **k):
+        if state["published"]:
+            raise RuntimeError("injected crash")
+        return real_rmtree(p, *a, **k)
+
+    monkeypatch.setattr(S, "_publish_manifest", tracking_publish)
+    monkeypatch.setattr(S.shutil, "rmtree", bomb_rmtree)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        S.maybe_compact(spark, path, batch_id=4, every=2)
+    monkeypatch.setattr(S.shutil, "rmtree", real_rmtree)
+    monkeypatch.setattr(S, "_publish_manifest", real_publish)
+    # the fold committed; now tear the published snapshot's data
+    live = S.live_partitions(path)
+    snap = next(d for b, d in live.items() if b < 0)
+    for root_, _dirs, files in os.walk(os.path.join(path, snap)):
+        for f in files:
+            if f.endswith(".parquet"):
+                os.remove(os.path.join(root_, f))
+    # recovery at the next fold-start call
     assert S.maybe_compact(spark, path, batch_id=4, every=8) is False
-    assert sorted(S._partitions(path)) == [0, 1, 2, 3]
-    assert _content(spark, path) == before
-    assert not os.path.exists(S._tmp_of(path))
-    assert not os.path.exists(os.path.join(path, S._JOURNAL))
-    # torn JOURNAL variant: unparseable journal = pre-commit state
-    union2 = spark.range(5).selectExpr("id as k", "md5(string(id)) as v")
-    union2.coalesce(1).write.parquet(S._tmp_of(path))
-    with open(os.path.join(path, S._JOURNAL), "w") as fh:
-        fh.write('{"fold": ["__b=')  # torn mid-write
-    assert S.maybe_compact(spark, path, batch_id=4, every=8) is False
-    assert _content(spark, path) == before
-    assert not os.path.exists(os.path.join(path, S._JOURNAL))
+    assert _visible(spark, path) == before
+    live = S.live_partitions(path)
+    assert sorted(b for b in live) == [0, 1, 2, 3]
+    assert not os.path.exists(os.path.join(path, snap))
 
 
-def test_torn_installed_dest_restored_from_trash(spark, tmp_path):
-    """Deeper power-loss case: the snapshot was already RENAMED into
-    place when its pages turn out torn (footer count disagrees with the
-    journal) and the trash still holds the sources' last copy. The
-    cleanup must not commit the torn snapshot — recovery replaces it
-    from trash."""
+def test_register_batch_is_replay_idempotent(spark, tmp_path):
     path = str(tmp_path / "state")
     os.makedirs(path)
-    for b in range(3):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    before = _content(spark, path)
-    # simulate: all sources renamed to trash, dest installed but torn
-    # (journal claims 30 rows, dest holds 10), tmp gone
-    os.makedirs(S._trash_of(path))
-    for b in range(3):
-        os.rename(
-            os.path.join(path, f"__b={b}"),
-            os.path.join(S._trash_of(path), f"__b={b}"),
-        )
-    _write_delta(spark, path, -1, lo=0, n=10)  # torn dest: 10 rows
-    S._write_journal(
-        path, {"fold": [f"__b={b}" for b in range(3)], "dest": "__b=-1",
-               "rows": 30}
+    _write_delta(spark, path, 0, lo=0, n=5)
+    S.register_batch(path, 0)
+    gen1, _ = S._latest_manifest(path)
+    # replay: overwrite + re-register publishes nothing new
+    _write_delta(spark, path, 0, lo=0, n=5)
+    S.register_batch(path, 0)
+    gen2, _ = S._latest_manifest(path)
+    assert gen1 == gen2
+    assert _visible(spark, path) == _expected(1, per=5)
+
+
+def test_unpublished_partition_is_invisible_until_replay_publishes(
+    spark, tmp_path
+):
+    """Crash between the data write and the publish: the dir exists
+    but readers don't see it; a replayed batch overwrites and
+    publishes it — exactly-once visible contents."""
+    path = str(tmp_path / "state")
+    _registered(spark, path, 1)
+    _write_delta(spark, path, 1, lo=10, n=10)  # crash before publish
+    assert _visible(spark, path) == _expected(1)
+    _write_delta(spark, path, 1, lo=10, n=10)  # replay
+    S.register_batch(path, 1)
+    assert _visible(spark, path) == _expected(2)
+
+
+def test_plan_fold_tiered_bounds_property():
+    """The pure planning function upholds the module's two asserted
+    bounds over random (batch count, every, ratio) — simulated without
+    Spark, so hypothesis can actually explore: live snapshot count
+    stays O(log_ratio B) and no row is rewritten more than
+    O(log_ratio B) times across a whole run."""
+    import math
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    @settings(max_examples=200, deadline=None)
+    @given(
+        batches=st.integers(min_value=8, max_value=400),
+        every=st.integers(min_value=2, max_value=16),
+        ratio=st.floats(min_value=1.2, max_value=4.0),
+        per=st.integers(min_value=1, max_value=50),
     )
-    S._recover(path)
-    assert sorted(S._partitions(path)) == [0, 1, 2]
-    assert _content(spark, path) == before
-    assert not os.path.exists(os.path.join(path, S._JOURNAL))
-    assert not os.path.isdir(S._trash_of(path))
-
-
-def test_legacy_journal_without_rows_rolls_forward(spark, tmp_path):
-    """A parseable journal without the r12 'rows' field (the pre-r12
-    format) must roll FORWARD under its original semantics. Treating it
-    as torn would restore the trash next to an already-installed
-    snapshot and double every folded row."""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(3):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    before = _content(spark, path)
-    # old-protocol crash state: snapshot installed, sources in trash,
-    # legacy journal (no rows) still present
-    union = spark.read.parquet(*[
-        os.path.join(path, f"__b={b}") for b in range(3)
-    ])
-    union.coalesce(1).write.parquet(os.path.join(path, "__b=-1"))
-    os.makedirs(S._trash_of(path))
-    for b in range(3):
-        os.rename(
-            os.path.join(path, f"__b={b}"),
-            os.path.join(S._trash_of(path), f"__b={b}"),
+    def run(batches, every, ratio, per):
+        parts: dict[int, str] = {}
+        rows: dict[str, int] = {}
+        rewrites: dict[str, int] = {}  # dir -> max rewrite depth inside
+        for b in range(batches):
+            planned = S._plan_fold(parts, rows, b, every, ratio=ratio)
+            if planned is not None:
+                fold, dest = planned
+                rows[dest] = sum(rows[d] for d in fold)
+                rewrites[dest] = 1 + max(rewrites.get(d, 0) for d in fold)
+                for d in fold:
+                    del rows[d]
+                    rewrites.pop(d, None)
+                parts = {
+                    k: v for k, v in parts.items() if v not in fold
+                }
+                parts[-int(dest.split("-")[1])] = dest
+            parts[b] = f"__b={b}"
+            rows[f"__b={b}"] = per
+            rewrites[f"__b={b}"] = 0
+        n_rows = batches * per
+        # a snapshot of size s absorbs a fold of t rows only when
+        # s <= ratio*t, so every rewrite multiplies the containing
+        # snapshot's size by >= (1 + 1/ratio) — the growth base the
+        # logarithmic bounds actually follow
+        base = 1.0 + 1.0 / ratio
+        bound = 2 + math.log(max(n_rows / max(per * every, 1), 1), base)
+        snaps = [b for b in parts if b < 0]
+        assert len(snaps) <= bound + 1, (
+            f"{len(snaps)} snapshots vs bound {bound}"
         )
-    import json as _json
-
-    with open(os.path.join(path, S._JOURNAL), "w") as fh:
-        _json.dump(
-            {"fold": [f"__b={b}" for b in range(3)], "dest": "__b=-1"}, fh
+        # every row's rewrite count is logarithmic, not linear
+        assert all(v <= bound + 1 for v in rewrites.values()), (
+            f"max rewrite depth {max(rewrites.values())} vs {bound}"
         )
-    S._recover(path)
-    assert sorted(S._partitions(path)) == [-1]
-    assert _content(spark, path) == before  # each row exactly once
-    assert not os.path.exists(os.path.join(path, S._JOURNAL))
+        # live dir count: deltas cap at `every` + snapshots
+        n_deltas = len([b for b in parts if b >= 0])
+        assert n_deltas <= every + 1
+
+    run()
+
+
+def _assert_live_compaction_matches_oracle(
+    spark, sf_dir, oracle_con, monkeypatch, query: str, every: int,
+    on_fold=None,
+) -> list[str]:
+    """Build ``query`` with compaction forced every ``every`` batches,
+    assert it matches the oracle exactly and that at least one fold ran;
+    return the side-table paths that folded. ``on_fold(path)`` runs
+    right after each fold, while the side table still exists."""
+    from twitter_kafka_etl_spark.plans import REGISTRY
+    from twitter_kafka_etl_spark.plans.oracle import compare
+
+    real_compact = S.maybe_compact
+    folded = []
+
+    def counting_compact(spark_, path, *a, **k):
+        if real_compact(spark_, path, *a, **k):
+            folded.append(path)
+            if on_fold is not None:
+                on_fold(path)
+            return True
+        return False
+
+    monkeypatch.setattr(S, "maybe_compact", counting_compact)
+    monkeypatch.setenv("SPARK_GRAFT_SIDE_COMPACT_EVERY", str(every))
+    out = REGISTRY[query].build(spark, sf_dir)
+    ok, msg = compare(out, oracle_con, REGISTRY[query].oracle)
+    assert ok, msg
+    assert folded, "compaction never fired"
+    return folded
 
 
 def test_qs12_with_live_compaction_matches_oracle(
@@ -332,15 +442,10 @@ def test_qs12_with_live_compaction_matches_oracle(
     """End-to-end: qs12 with compaction forced live mid-stream
     (every=2 over the 4-batch oracle schedule) produces the exact
     oracle result — the fold is invisible to query semantics."""
-    from twitter_kafka_etl_spark.plans import REGISTRY
-    from twitter_kafka_etl_spark.plans.oracle import compare
-
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_COMPACT_EVERY", "2")
-    out = REGISTRY["qs12_stream_incremental_dedup"].build(spark, sf_dir)
-    ok, msg = compare(
-        out, oracle_con, REGISTRY["qs12_stream_incremental_dedup"].oracle
+    _assert_live_compaction_matches_oracle(
+        spark, sf_dir, oracle_con, monkeypatch,
+        "qs12_stream_incremental_dedup", every=2,
     )
-    assert ok, msg
 
 
 def test_qs17_with_live_compaction_matches_oracle(
@@ -349,12 +454,23 @@ def test_qs17_with_live_compaction_matches_oracle(
     """Same end-to-end gate for the near-dup ingest: both its side
     tables (kept corpus + band index) compact mid-stream and the
     4-level recursion oracle still matches exactly."""
-    from twitter_kafka_etl_spark.plans import REGISTRY
-    from twitter_kafka_etl_spark.plans.oracle import compare
-
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_COMPACT_EVERY", "2")
-    out = REGISTRY["qs17_stream_neardup_ingest"].build(spark, sf_dir)
-    ok, msg = compare(
-        out, oracle_con, REGISTRY["qs17_stream_neardup_ingest"].oracle
+    _assert_live_compaction_matches_oracle(
+        spark, sf_dir, oracle_con, monkeypatch,
+        "qs17_stream_neardup_ingest", every=2,
     )
-    assert ok, msg
+
+
+@pytest.mark.parametrize(
+    "query",
+    ["qs14_stream_novelty", "qs15_stream_heavy_hitters"],
+    ids=lambda q: q.split("_", 1)[0],
+)
+def test_live_compaction_matches_oracle(
+    spark, sf_dir, oracle_con, monkeypatch, query
+):
+    """The same gate for the remaining ingest folds, so all four run
+    with compaction live: qs14's novelty state, and qs15, the one fold
+    whose compaction uses a custom merge/invariant pair."""
+    _assert_live_compaction_matches_oracle(
+        spark, sf_dir, oracle_con, monkeypatch, query, every=2
+    )

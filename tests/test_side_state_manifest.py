@@ -1,287 +1,94 @@
-"""Manifest (rename-free, object-store) side-state visibility
-(streaming/side_state.py manifest section): content preservation under
-folds, atomic-publish crash semantics at EVERY filesystem step, torn
-manifests, torn published snapshots, replay idempotence, the pure
-tiered-merge planning bounds (hypothesis, no Spark), and the qs12/qs17
-end-to-end oracle equivalence with the whole protocol live."""
+"""The side-state manifest log itself (streaming/side_state.py): what
+each ``_manifests/m-<gen>.json`` generation records, that the log stays
+bounded and self-verifying over a long drive, that a merging fold
+records its post-merge row count, and that the ingest folds publish a
+well-formed fold generation while matching the oracle at a compaction
+cadence that leaves an unfolded delta beside the snapshot.
+
+Content, replay-safety and crash-point tests live in test_side_state.py;
+this file checks the generations they publish."""
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
+from tests.test_side_state import (
+    _assert_live_compaction_matches_oracle,
+    _expected,
+    _visible,
+    _write_delta,
+)
 from twitter_kafka_etl_spark.streaming import side_state as S
 
 
-def _write_delta(spark, path: str, b: int, lo: int, n: int) -> None:
-    spark.range(lo, lo + n).select(
-        F.col("id").alias("k"), F.md5(F.col("id").cast("string")).alias("v")
-    ).write.mode("overwrite").parquet(os.path.join(path, f"__b={b}"))
+def _generations(path: str) -> list[dict]:
+    mdir = S._mdir(path)
+    out = []
+    for name in sorted(os.listdir(mdir)):
+        if name.startswith("m-") and name.endswith(".json"):
+            with open(os.path.join(mdir, name), encoding="utf-8") as fh:
+                out.append(json.load(fh))
+    return out
 
 
-def _visible(spark, path: str) -> list[tuple]:
-    return sorted(
-        (r.k, r.v)
-        for r in S.read_side(spark, path).select("k", "v").collect()
-    )
+def _assert_fold_generation(path: str) -> None:
+    """The newest generation is a fold: it names its snapshot, whose
+    footer row count it recorded, and its folded sources are neither
+    referenced nor left on disk."""
+    _gen, m = S._latest_manifest(path)
+    assert m is not None and m.get("snapshot") in m["parts"]
+    snap = m["snapshot"]
+    assert S._by_batch([snap]) and min(S._by_batch([snap])) < 0
+    assert S._dir_stats(os.path.join(path, snap))[0] == m["rows"]
+    assert m["folded"] and not set(m["folded"]) & set(m["parts"])
+    on_disk = set(S._partitions(path).values())
+    assert not set(m["folded"]) & on_disk
 
 
-def _expected(n_batches: int, per: int = 10) -> list[tuple]:
-    return sorted(
-        (i, hashlib.md5(str(i).encode()).hexdigest())
-        for i in range(n_batches * per)
-    )
-
-
-@pytest.fixture
-def manifest_env(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_MANIFEST", "1")
-
-
-def test_manifest_drive_preserves_content_and_bounds_dirs(
-    spark, tmp_path, manifest_env
-):
-    """40 batches, every=8: visible content is exactly every row
-    written, live dirs stay bounded, and on-disk garbage does not
-    accumulate (GC keeps the root close to the live set)."""
+def test_manifest_drive_preserves_content_and_bounds_dirs(spark, tmp_path):
+    """40 batches, every=8, checked through the log: one generation per
+    publish (40 registrations + one per fold), gapless and increasing;
+    ``_manifests/`` keeps only the retention window; every retained
+    generation verifies its sha; every fold generation is well formed;
+    and the newest names exactly the dirs that serve every row."""
     path = str(tmp_path / "state")
     os.makedirs(path)
     folds = 0
     for b in range(40):
-        folds += S.maybe_compact(spark, path, b, every=8)
+        if S.maybe_compact(spark, path, b, every=8):
+            folds += 1
+            _assert_fold_generation(path)
         _write_delta(spark, path, b, lo=b * 10, n=10)
         S.register_batch(path, b)
     assert folds >= 3
+    gen, m = S._latest_manifest(path)
+    assert gen == 40 + folds
+    kept = _generations(path)
+    assert len(kept) == S._MANIFEST_KEEP
+    assert [g["gen"] for g in kept] == list(
+        range(gen - S._MANIFEST_KEEP + 1, gen + 1)
+    )
+    assert all(g["sha"] == S._manifest_sha(g) for g in kept)
+    assert all(g["parts"] == sorted(g["parts"]) for g in kept)
+    assert not [
+        n for n in os.listdir(S._mdir(path)) if n.endswith(".tmp")
+    ]
+    assert all(os.path.isdir(os.path.join(path, d)) for d in m["parts"])
     assert _visible(spark, path) == _expected(40)
-    live = S.live_partitions(path)
-    assert live is not None and len(live) <= 8 + 4
-    snaps = [b for b in live if b < 0]
-    assert snaps and len(snaps) <= 4
-    # the root holds live dirs plus at most the in-flight margin —
-    # folded sources are GC'd, not abandoned
-    assert len(S._partitions(path)) <= len(live) + 1
-    # row accounting is manifest-aware
     assert S.live_rows(path) == 400
 
 
-def test_manifest_protocol_is_rename_free(
-    spark, tmp_path, manifest_env, monkeypatch
-):
-    """The visibility protocol performs no os.rename: drive a full
-    fold with rename booby-trapped. (Scope per the module docs: this
-    is about the publish/GC protocol — Spark's own parquet committer
-    renames inside a partition write, which is the platform
-    committer's job on a real object store — so the trap arms only
-    around the side_state calls, not the data writes.)"""
-
-    def bomb(*a, **k):
-        raise AssertionError("os.rename in manifest visibility protocol")
-
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(4):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-        monkeypatch.setattr(S.os, "rename", bomb)
-        S.register_batch(path, b)
-        monkeypatch.setattr(S.os, "rename", os.rename)
-    monkeypatch.setattr(S.os, "rename", bomb)
-    assert S.maybe_compact(spark, path, batch_id=4, every=2)
-    monkeypatch.setattr(S.os, "rename", os.rename)
-    assert _visible(spark, path) == _expected(4)
-    assert [b for b in S.live_partitions(path) if b < 0]
-
-
-def test_reader_sees_pre_or_post_fold_at_every_crash_point(
-    spark, tmp_path, monkeypatch, manifest_env
-):
-    """Systematic crash injection over every destructive/commit fs op
-    in the fold (manifest publishes via os.replace, GC/sweep via
-    shutil.rmtree, retention pruning via os.remove). After EVERY crash
-    point, WITHOUT recovery, a reader must see exactly the pre-fold or
-    the post-fold row set — the manifest mode's strengthened claim —
-    and after the next fold-start call (recovery) the same must hold
-    with the garbage swept."""
-    import itertools
-
-    real_replace, real_rmtree, real_remove = (
-        os.replace,
-        S.shutil.rmtree,
-        os.remove,
-    )
-    pre, post = _expected(4), _expected(4)
-    for crash_at in itertools.count(1):
-        path = str(tmp_path / f"state_{crash_at}")
-        os.makedirs(path)
-        for b in range(4):
-            _write_delta(spark, path, b, lo=b * 10, n=10)
-            S.register_batch(path, b)
-        calls = {"n": 0}
-
-        def _tick(_c=calls, _ca=crash_at):
-            _c["n"] += 1
-            if _c["n"] == _ca:
-                raise RuntimeError("injected crash")
-
-        def bomb_replace(src, dst, *, _t=_tick):
-            _t()
-            return real_replace(src, dst)
-
-        def bomb_rmtree(p, *a, _t=_tick, **k):
-            _t()
-            return real_rmtree(p, *a, **k)
-
-        def bomb_remove(p, *, _t=_tick):
-            _t()
-            return real_remove(p)
-
-        monkeypatch.setattr(S.os, "replace", bomb_replace)
-        monkeypatch.setattr(S.shutil, "rmtree", bomb_rmtree)
-        monkeypatch.setattr(S.os, "remove", bomb_remove)
-        try:
-            S.maybe_compact(spark, path, batch_id=4, every=2)
-            crashed = False
-        except RuntimeError as e:
-            assert "injected crash" in str(e)
-            crashed = True
-        finally:
-            monkeypatch.setattr(S.os, "replace", real_replace)
-            monkeypatch.setattr(S.shutil, "rmtree", real_rmtree)
-            monkeypatch.setattr(S.os, "remove", real_remove)
-        # no recovery yet: the reader's view is already exactly pre or
-        # post (the publish is the only visibility transition)
-        assert _visible(spark, path) in (pre, post), f"crash {crash_at}"
-        # recovery = the next fold-start call
-        S.maybe_compact(spark, path, batch_id=4, every=8)
-        assert _visible(spark, path) in (pre, post), f"crash {crash_at}"
-        live = set((S.live_partitions(path) or {}).values())
-        on_disk = set(S._partitions(path).values())
-        assert on_disk <= live, f"unswept garbage at crash {crash_at}"
-        if not crashed:
-            break
-
-
-def test_torn_manifest_falls_back_to_previous_generation(
-    spark, tmp_path, manifest_env
-):
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(3):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-        S.register_batch(path, b)
-    before = _visible(spark, path)
-    gen, _ = S._latest_manifest(path)
-    # a torn local write / truncated PUT: garbage bytes under the next
-    # generation's name — readers must skip it (sha mismatch), not
-    # error and not see a partial part list
-    with open(
-        os.path.join(S._mdir(path), f"m-{gen + 1:012d}.json"), "w"
-    ) as fh:
-        fh.write('{"gen": %d, "parts": ["__b=' % (gen + 1))
-    assert _visible(spark, path) == before
-    # and the writer path keeps going: the next publish overwrites the
-    # torn object deterministically
-    _write_delta(spark, path, 3, lo=30, n=10)
-    S.register_batch(path, 3)
-    assert _visible(spark, path) == _expected(4)
-
-
-def test_torn_published_snapshot_rolls_back_to_sources(
-    spark, tmp_path, manifest_env, monkeypatch
-):
-    """Power-loss emulation in the publish→GC window: the manifest
-    committed (snapshot live, rows recorded) but the snapshot's pages
-    are gone. Recovery must publish a rollback manifest naming the
-    still-present sources — never serve the truncated snapshot."""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(4):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-        S.register_batch(path, b)
-    before = _visible(spark, path)
-    # crash on the FIRST destructive op after the publish: the fold is
-    # committed, GC never starts, sources intact
-    real_rmtree = S.shutil.rmtree
-    real_publish = S._publish_manifest
-    state = {"published": False}
-
-    def tracking_publish(*a, **k):
-        out = real_publish(*a, **k)
-        state["published"] = True
-        return out
-
-    def bomb_rmtree(p, *a, **k):
-        if state["published"]:
-            raise RuntimeError("injected crash")
-        return real_rmtree(p, *a, **k)
-
-    monkeypatch.setattr(S, "_publish_manifest", tracking_publish)
-    monkeypatch.setattr(S.shutil, "rmtree", bomb_rmtree)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        S.maybe_compact(spark, path, batch_id=4, every=2)
-    monkeypatch.setattr(S.shutil, "rmtree", real_rmtree)
-    monkeypatch.setattr(S, "_publish_manifest", real_publish)
-    # the fold committed; now tear the published snapshot's data
-    live = S.live_partitions(path)
-    snap = next(d for b, d in live.items() if b < 0)
-    for root_, _dirs, files in os.walk(os.path.join(path, snap)):
-        for f in files:
-            if f.endswith(".parquet"):
-                os.remove(os.path.join(root_, f))
-    # recovery at the next fold-start call
-    assert S.maybe_compact(spark, path, batch_id=4, every=8) is False
-    assert _visible(spark, path) == before
-    live = S.live_partitions(path)
-    assert sorted(b for b in live) == [0, 1, 2, 3]
-    assert not os.path.exists(os.path.join(path, snap))
-
-
-def test_register_batch_is_replay_idempotent(spark, tmp_path, manifest_env):
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    _write_delta(spark, path, 0, lo=0, n=5)
-    S.register_batch(path, 0)
-    gen1, _ = S._latest_manifest(path)
-    # replay: overwrite + re-register publishes nothing new
-    _write_delta(spark, path, 0, lo=0, n=5)
-    S.register_batch(path, 0)
-    gen2, _ = S._latest_manifest(path)
-    assert gen1 == gen2
-    assert _visible(spark, path) == _expected(1, per=5)
-
-
-def test_unpublished_partition_is_invisible_until_replay_publishes(
-    spark, tmp_path, manifest_env
-):
-    """Crash between the data write and the publish: the dir exists
-    but readers don't see it; a replayed batch overwrites and
-    publishes it — exactly-once visible contents."""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    _write_delta(spark, path, 0, lo=0, n=10)
-    S.register_batch(path, 0)
-    _write_delta(spark, path, 1, lo=10, n=10)  # crash before publish
-    assert _visible(spark, path) == _expected(1)
-    _write_delta(spark, path, 1, lo=10, n=10)  # replay
-    S.register_batch(path, 1)
-    assert _visible(spark, path) == _expected(2)
-
-
-def test_merge_variant_preserves_groupwise_sums_manifest(
-    spark, tmp_path, manifest_env
-):
-    """qs15's additive count-min shape under manifest visibility."""
+def test_merge_variant_preserves_groupwise_sums_manifest(spark, tmp_path):
+    """qs15's additive count-min shape, folded twice: each fold
+    generation records the MERGED snapshot's row count (16 cells, not
+    the 64 or 80 input rows), live-row accounting follows the log, and
+    the second fold, whose input includes the first snapshot, keeps
+    the cell totals exact."""
     path = str(tmp_path / "cells")
     os.makedirs(path)
-    for b in range(4):
-        spark.createDataFrame(
-            [(d, c, 1) for d in range(2) for c in range(8)],
-            "depth int, cell int, counts long",
-        ).write.mode("overwrite").parquet(os.path.join(path, f"__b={b}"))
-        S.register_batch(path, b)
     merge = lambda df: df.groupBy("depth", "cell").agg(  # noqa: E731
         F.sum("counts").alias("counts")
     )
@@ -289,125 +96,58 @@ def test_merge_variant_preserves_groupwise_sums_manifest(
         F.sum("counts").cast("bigint").alias("s"),
         F.countDistinct("depth", "cell").alias("d"),
     )
-    assert S.maybe_compact(
-        spark, path, batch_id=4, every=2, merge=merge, invariant=inv
-    )
-    got = {
-        (r.depth, r.cell): r.counts
-        for r in merge(S.read_side(spark, path)).collect()
-    }
-    assert got == {(d, c): 4 for d in range(2) for c in range(8)}
-
-
-def test_legacy_table_bootstraps_into_manifest_mode(
-    spark, tmp_path, monkeypatch
-):
-    """A listing-visible table that accumulated deltas BEFORE the env
-    flag flipped: the first manifest-mode fold publishes its listing
-    as gen 1 and proceeds; reads stay correct throughout."""
-    path = str(tmp_path / "state")
-    os.makedirs(path)
-    for b in range(4):
-        _write_delta(spark, path, b, lo=b * 10, n=10)
-    assert not S.is_manifest_table(path)
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_MANIFEST", "1")
-    assert S.maybe_compact(spark, path, batch_id=4, every=2)
-    assert S.is_manifest_table(path)
-    assert _visible(spark, path) == _expected(4)
-
-
-def test_plan_fold_tiered_bounds_property():
-    """The pure planning function upholds the module's two asserted
-    bounds over random (batch count, every, ratio) — simulated without
-    Spark, so hypothesis can actually explore: live snapshot count
-    stays O(log_ratio B) and no row is rewritten more than
-    O(log_ratio B) times across a whole run."""
-    import math
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        batches=st.integers(min_value=8, max_value=400),
-        every=st.integers(min_value=2, max_value=16),
-        ratio=st.floats(min_value=1.2, max_value=4.0),
-        per=st.integers(min_value=1, max_value=50),
-    )
-    def run(batches, every, ratio, per):
-        parts: dict[int, str] = {}
-        rows: dict[str, int] = {}
-        rewrites: dict[str, int] = {}  # dir -> max rewrite depth inside
-        next_written = 0
-        for b in range(batches):
-            planned = S._plan_fold(parts, rows, b, every, ratio=ratio)
-            if planned is not None:
-                fold, dest = planned
-                rows[dest] = sum(rows[d] for d in fold)
-                rewrites[dest] = 1 + max(rewrites.get(d, 0) for d in fold)
-                for d in fold:
-                    del rows[d]
-                    rewrites.pop(d, None)
-                parts = {
-                    k: v for k, v in parts.items() if v not in fold
-                }
-                parts[-int(dest.split("-")[1])] = dest
-            parts[b] = f"__b={b}"
-            rows[f"__b={b}"] = per
-            rewrites[f"__b={b}"] = 0
-        n_rows = batches * per
-        # a snapshot of size s absorbs a fold of t rows only when
-        # s <= ratio*t, so every rewrite multiplies the containing
-        # snapshot's size by >= (1 + 1/ratio) — the growth base the
-        # logarithmic bounds actually follow
-        base = 1.0 + 1.0 / ratio
-        bound = 2 + math.log(max(n_rows / max(per * every, 1), 1), base)
-        snaps = [b for b in parts if b < 0]
-        assert len(snaps) <= bound + 1, (
-            f"{len(snaps)} snapshots vs bound {bound}"
+    n_batches = 0
+    for target in (4, 8):
+        while n_batches < target:
+            spark.createDataFrame(
+                [(d, c, 1) for d in range(2) for c in range(8)],
+                "depth int, cell int, counts long",
+            ).write.mode("overwrite").parquet(
+                os.path.join(path, f"__b={n_batches}")
+            )
+            S.register_batch(path, n_batches)
+            n_batches += 1
+        assert S.maybe_compact(
+            spark, path, batch_id=n_batches, every=2,
+            merge=merge, invariant=inv,
         )
-        # every row's rewrite count is logarithmic, not linear
-        assert all(v <= bound + 1 for v in rewrites.values()), (
-            f"max rewrite depth {max(rewrites.values())} vs {bound}"
+        _assert_fold_generation(path)
+        _gen, m = S._latest_manifest(path)
+        assert m["rows"] == 16
+        assert S.live_rows(path) == sum(
+            S._dir_stats(os.path.join(path, d))[0] for d in m["parts"]
         )
-        # live dir count: deltas cap at `every` + snapshots
-        n_deltas = len([b for b in parts if b >= 0])
-        assert n_deltas <= every + 1
-
-    run()
+        got = {
+            (r.depth, r.cell): r.counts
+            for r in merge(S.read_side(spark, path)).collect()
+        }
+        assert got == {
+            (d, c): n_batches for d in range(2) for c in range(8)
+        }
 
 
 def test_qs12_manifest_mode_matches_oracle(
     spark, sf_dir, oracle_con, monkeypatch
 ):
-    """End-to-end: qs12 with manifest visibility AND compaction forced
-    live mid-stream matches the oracle exactly — the protocol swap is
-    invisible to query semantics."""
-    from twitter_kafka_etl_spark.plans import REGISTRY
-    from twitter_kafka_etl_spark.plans.oracle import compare
-
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_MANIFEST", "1")
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_COMPACT_EVERY", "2")
-    out = REGISTRY["qs12_stream_incremental_dedup"].build(spark, sf_dir)
-    ok, msg = compare(
-        out, oracle_con, REGISTRY["qs12_stream_incremental_dedup"].oracle
+    """qs12 with compaction every 3 over the 4-batch oracle schedule:
+    the fold at batch 3 leaves batch 3's delta live beside the
+    snapshot, the fold publishes a well-formed generation, and the
+    result matches the oracle exactly."""
+    _assert_live_compaction_matches_oracle(
+        spark, sf_dir, oracle_con, monkeypatch,
+        "qs12_stream_incremental_dedup", every=3,
+        on_fold=_assert_fold_generation,
     )
-    assert ok, msg
 
 
 def test_qs17_manifest_mode_matches_oracle(
     spark, sf_dir, oracle_con, monkeypatch
 ):
-    """Same gate for the near-dup ingest: BOTH side tables under
-    manifest visibility, compacting mid-stream, 4-level recursion
-    oracle exact."""
-    from twitter_kafka_etl_spark.plans import REGISTRY
-    from twitter_kafka_etl_spark.plans.oracle import compare
-
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_MANIFEST", "1")
-    monkeypatch.setenv("SPARK_GRAFT_SIDE_COMPACT_EVERY", "2")
-    out = REGISTRY["qs17_stream_neardup_ingest"].build(spark, sf_dir)
-    ok, msg = compare(
-        out, oracle_con, REGISTRY["qs17_stream_neardup_ingest"].oracle
+    """The same gate for the near-dup ingest, whose corpus and band
+    index each publish their own fold generation."""
+    folded = _assert_live_compaction_matches_oracle(
+        spark, sf_dir, oracle_con, monkeypatch,
+        "qs17_stream_neardup_ingest", every=3,
+        on_fold=_assert_fold_generation,
     )
-    assert ok, msg
+    assert len(set(folded)) == 2

@@ -427,10 +427,9 @@ def _rows_in(path: str) -> int:
     """Row count from parquet FOOTERS, driver-side — tracking an
     accumulated index's size (the bloom-crossover decision in qs12 and
     qs14) must not cost a Spark job per micro-batch. Delegates to
-    side_state.live_rows: the footer walk covers exactly the VISIBLE
-    partitions — the whole root for a listing-visible table, the
-    manifest-listed dirs for a manifest table (where the root may also
-    hold invisible garbage awaiting GC)."""
+    side_state.live_rows: the footer walk covers exactly the
+    manifest-listed partitions (the root may also hold invisible
+    garbage awaiting GC)."""
     from twitter_kafka_etl_spark.streaming.side_state import live_rows
 
     return live_rows(path)
@@ -1292,8 +1291,6 @@ def qs12(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = batch_df.sparkSession
 
         def seen_fps() -> DataFrame:
-            # read_side: listing-visible or manifest-visible, the
-            # table decides (side_state manifest mode)
             return (
                 read_side(s, index)
                 .filter(F.col("__b") != batch_id)
@@ -1413,10 +1410,9 @@ def qs12(spark: SparkSession, sf_dir: str) -> DataFrame:
             novel.select("doc_id", "fp").write.mode("overwrite").parquet(
                 os.path.join(index, f"__b={batch_id}")
             )
-            # manifest mode: the partition becomes visible only on
-            # publish (no-op under listing visibility). The corpus
-            # stays listing-visible — it is never compacted, so it has
-            # no rename/visibility hazard to defend.
+            # the partition becomes visible only on publish. The
+            # corpus stays listing-visible — it is never compacted, so
+            # it has no visibility hazard to defend.
             register_batch(index, batch_id)
 
         def _w_corpus() -> None:
@@ -1664,7 +1660,6 @@ def qs14(spark: SparkSession, sf_dir: str) -> DataFrame:
         maybe_compact(s, index, batch_id)
 
         def seen_hashes() -> DataFrame:
-            # read_side: listing- or manifest-visible, the table decides
             return (
                 read_side(s, index)
                 .filter(F.col("__b") != batch_id)
@@ -1802,9 +1797,8 @@ def qs14(spark: SparkSession, sf_dir: str) -> DataFrame:
             novel.select("sh_h").write.mode("overwrite").parquet(
                 os.path.join(index, f"__b={batch_id}")
             )
-            # manifest mode: visible only on publish (no-op under
-            # listing visibility); the stats table is never compacted
-            # and stays listing-visible
+            # visible only on publish; the stats table is never
+            # compacted and stays listing-visible
             register_batch(index, batch_id)
 
         _concurrent_actions(_w_stats, _w_index)
@@ -1910,8 +1904,7 @@ def _register_qs15() -> None:
             K.count_min_build(batch_df, "user_id").write.mode(
                 "overwrite"
             ).parquet(os.path.join(cells, f"__b={batch_id}"))
-            # manifest mode: visible only on publish (no-op under
-            # listing visibility); raw stays listing-visible
+            # visible only on publish; raw stays listing-visible
             register_batch(cells, batch_id)
 
         stream = _read_stream(spark, in_dir, ev)
@@ -2213,8 +2206,6 @@ def _register_qs17() -> None:
             # existed only to dedup the overlap the anti-join semantics
             # absorb for free (guide §2.4: remove shuffles outright).
             if os.path.exists(corpus):
-                # read_side: listing- or manifest-visible, the tables
-                # decide (side_state manifest mode)
                 seen_fp = (
                     read_side(s, corpus)
                     .filter(F.col("__b") != batch_id)
@@ -2248,7 +2239,7 @@ def _register_qs17() -> None:
             # overwrites of different tables off checkpointed frames:
             # submit them concurrently (guide §2.6) — each thread
             # publishes its OWN table's manifest generation after its
-            # write (no-op under listing visibility)
+            # write
             def _w_corpus() -> None:
                 kept.select("doc_id", "batch", "fp").write.mode(
                     "overwrite"

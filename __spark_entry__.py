@@ -94,14 +94,6 @@ _REWRITTEN_OPS: dict[str, int] = {
     # sizing count / convergence aggregate — one driver-job gap per
     # round instead of two, same labels (test-asserted).
     "operators.dedup.connected_components": 14,
-    # plan_memo/peek_memo: memo entries carry a materialized flag so
-    # an eager request that hits (or loses a race to) a lazily-built
-    # entry materializes it then (r13 advice); _repin gains the
-    # cluster-hardening spark.tkes.memo.fullProbe count() probe (r13
-    # verdict item 7). Hit-path internals changed for every memoized
-    # working set's consumers.
-    "operators._cache.plan_memo": 14,
-    "operators._cache.peek_memo": 14,
     # qs14/qs16/qs17 derive their arrival-schedule width from parquet
     # footer statistics (io.parquet_footer_max) instead of a per-run
     # Spark max() job — same value, one less job per build.
@@ -116,6 +108,19 @@ _REWRITTEN_OPS: dict[str, int] = {
     # Series.sum's skipna semantics on null values (r13 advice; no
     # value change on null-free data).
     "streaming.stateful.running_user_totals": 14,
+    #
+    # r15:
+    #
+    # plan_memo/peek_memo serve every hit (and a lost race)
+    # through one helper that reads the frame's cached partitions from
+    # the block manager instead of a stored flag: fully cached → no
+    # job; whole eviction → re-register + take(1); partial loss or an
+    # eager request → re-register + count(). Memo eviction now
+    # unpersists checkpoint-backed results' cache buffers too.
+    # Hit-path internals changed for every memoized working set's
+    # consumers.
+    "operators._cache.plan_memo": 15,
+    "operators._cache.peek_memo": 15,
 }
 # NOT registered: _order_files' numeric-aware sort — for every staging
 # the committed queries produce (≤10 single-digit "__f=N" dirs) the

@@ -2053,63 +2053,147 @@ def test_memo_eviction_never_kills_checkpoint_backed_holder(spark, sf_dir):
 
 def test_memo_eager_hit_materializes_lazy_entry(spark):
     """An eager=True plan_memo request that HITS a lazily-persisted
-    entry must materialize it then and record the fact — otherwise the
-    stampede fix silently depends on which consumer populated the memo
-    slot first (r13 advice)."""
+    entry must materialize it then — otherwise the stampede fix
+    silently depends on which consumer populated the memo slot first
+    (r13 advice). The entry stores only the frame; its state is the
+    derived block status."""
     from twitter_kafka_etl_spark.operators import _cache
 
     src = spark.range(100)
     tag = ("__test_eager_on_hit",)
     with _cache._LOCK:
         _cache._MEMO.clear()
-    # cold build, lazy: entry records materialized=False
+    # cold build, lazy: persisted, no partition cached yet
     lazy = _cache.plan_memo(src, tag, lambda: src.selectExpr("id * 2 AS v"))
     key = _cache._plan_key(src, tag)
-    assert _cache._MEMO[key][0] is lazy
-    assert _cache._MEMO[key][2] is False
-    # eager hit on the lazy entry: same frame back, flag flipped
+    assert _cache._MEMO[key] is lazy
+    assert _cache._cached_partitions(lazy)[0] == 0
+    # eager hit on the lazy entry: same frame back, every partition cached
     hit = _cache.plan_memo(
         src, tag, lambda: src.selectExpr("id * 2 AS v"), eager=True
     )
     assert hit is lazy
-    assert _cache._MEMO[key][2] is True
+    cached, total = _cache._cached_partitions(hit)
+    assert cached == total > 0
+    hit.unpersist()
     with _cache._LOCK:
         _cache._MEMO.clear()
 
 
-def test_repin_full_probe_conf_validates_every_partition(spark):
-    """spark.tkes.memo.fullProbe=true switches the memo liveness probe
-    from take(1) (one partition — exact only under local-mode all-block
-    eviction) to count() (every partition — the cluster-hardened probe,
-    r13 verdict item 7). The flagged path must serve hits and survive a
-    full external eviction by rebuilding."""
+def _buffer_rdd(spark, df):
+    """The JVM RDD holding ``df``'s cache buffers (``df`` is cached)."""
+    return (
+        spark._jsparkSession.sharedState().cacheManager()
+        .lookupCachedData(df._jdf).get().cachedRepresentation()
+        .cacheBuilder().cachedColumnBuffers()
+    )
+
+
+def _block_counts(spark, df):
+    """(cached, total) partitions of ``df``'s cache buffers, asked of
+    the block manager master block by block — independent of the
+    engine's own status read."""
+    rdd = _buffer_rdd(spark, df)
+    master = spark._jvm.org.apache.spark.SparkEnv.get().blockManager().master()
+    block = spark._jvm.org.apache.spark.storage.RDDBlockId
+    n = rdd.getNumPartitions()
+    cached = sum(
+        not master.getLocations(block(rdd.id(), i)).isEmpty() for i in range(n)
+    )
+    return cached, n
+
+
+def test_memo_hit_after_eviction_is_fully_cached(spark):
+    """clearCache → non-eager hit → eager hit, then an RDD-level
+    unpersist of the buffers → eager hit: each eager hit must come back
+    with EVERY partition cached and the right rows. A stored
+    materialized flag missed both: the non-eager hit re-pinned lazily
+    and left the flag set (1/8 cached), and after the RDD-level
+    unpersist the storage level stayed set over dropped blocks (0/8)."""
+    from pyspark.sql import functions as F
+
     from twitter_kafka_etl_spark.operators import _cache
 
-    spark.conf.set("spark.tkes.memo.fullProbe", "true")
-    try:
-        src = spark.range(64)
-        tag = ("__test_full_probe",)
-        with _cache._LOCK:
-            _cache._MEMO.clear()
-        built = _cache.plan_memo(
-            src, tag, lambda: src.selectExpr("id + 1 AS v"), eager=True
-        )
-        # hit under the full probe: the count() validates every block
-        hit = _cache.plan_memo(
-            src, tag, lambda: src.selectExpr("id + 1 AS v"), eager=True
-        )
-        assert hit is built
-        # external eviction (the bench hygiene path): probe must detect
-        # the dead blocks and the call must rebuild, not serve a corpse
-        spark.catalog.clearCache()
-        again = _cache.plan_memo(
-            src, tag, lambda: src.selectExpr("id + 1 AS v"), eager=True
-        )
-        assert again.count() == 64
-    finally:
-        spark.conf.unset("spark.tkes.memo.fullProbe")
-        with _cache._LOCK:
-            _cache._MEMO.clear()
+    src = spark.range(0, 800, 1, 8)
+    tag = ("__test_evicted_hit",)
+
+    def build():
+        return src.selectExpr("id * 3 AS v")
+
+    want = 3 * sum(range(800))
+    with _cache._LOCK:
+        _cache._MEMO.clear()
+    built = _cache.plan_memo(src, tag, build, eager=True)
+    assert _block_counts(spark, built) == (8, 8)
+    spark.catalog.clearCache()
+    _cache.plan_memo(src, tag, build)
+    hit = _cache.plan_memo(src, tag, build, eager=True)
+    assert hit is built
+    assert _block_counts(spark, hit) == (8, 8)
+    assert hit.agg(F.sum("v")).first()[0] == want
+    # RDD-level unpersist of the buffers (bench.py's hygiene path)
+    rid = _buffer_rdd(spark, hit).id()
+    for rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).values():
+        if rdd.id() == rid:
+            rdd.unpersist(True)
+    assert _block_counts(spark, hit) == (0, 8)
+    hit = _cache.plan_memo(src, tag, build, eager=True)
+    assert _block_counts(spark, hit) == (8, 8)
+    assert hit.agg(F.sum("v")).first()[0] == want
+    hit.unpersist()
+    with _cache._LOCK:
+        _cache._MEMO.clear()
+
+
+def test_memo_partial_eviction_hit_recaches_every_partition(spark):
+    """A hit that lost SOME blocks (executor loss on a cluster) must be
+    validated and re-cached on every partition, with no conf set: the
+    probe depth follows the observed block state, so peek_memo and a
+    plan_memo hit both come back 8/8 with the right rows."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from twitter_kafka_etl_spark.operators import _cache
+
+    src = spark.range(0, 640, 1, 8)
+    tag = ("__test_partial_eviction",)
+
+    def build():
+        return src.selectExpr("id + 5 AS v")
+
+    want = sum(range(640)) + 5 * 640
+    master = spark._jvm.org.apache.spark.SparkEnv.get().blockManager().master()
+    block = spark._jvm.org.apache.spark.storage.RDDBlockId
+
+    def drop_block(df, index):
+        master.removeBlock(block(_buffer_rdd(spark, df).id(), index))
+        # removeBlock is asynchronous: wait until the master and the
+        # driver's storage status both see the block gone
+        deadline = time.monotonic() + 30
+        while (_block_counts(spark, df), _cache._cached_partitions(df)) != (
+            (7, 8), (7, 8)
+        ):
+            assert time.monotonic() < deadline
+            time.sleep(0.05)
+
+    with _cache._LOCK:
+        _cache._MEMO.clear()
+    built = _cache.plan_memo(src, tag, build, eager=True)
+    assert _block_counts(spark, built) == (8, 8)
+    drop_block(built, 3)
+    peeked = _cache.peek_memo(src, tag)
+    assert peeked is built
+    assert _block_counts(spark, peeked) == (8, 8)
+    assert peeked.agg(F.sum("v")).first()[0] == want
+    drop_block(built, 3)
+    hit = _cache.plan_memo(src, tag, build)
+    assert hit is built
+    assert _block_counts(spark, hit) == (8, 8)
+    assert hit.agg(F.sum("v")).first()[0] == want
+    hit.unpersist()
+    with _cache._LOCK:
+        _cache._MEMO.clear()
 
 
 def test_components_working_set_builds_once_across_consumers(spark, sf_dir):

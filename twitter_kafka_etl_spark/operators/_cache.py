@@ -22,6 +22,18 @@ digest closes it. Entries are bounded and unpersisted on eviction,
 and all map access is under a lock so concurrent callers (foreachBatch
 worker threads share the session) can't race the dict or eviction.
 
+The memo stores only ``key -> frame``. Whether a hit is still live,
+and how deep it must be probed, is derived at each hit from the block
+manager (``_cached_partitions``: cached vs total partitions of the
+frame's cache buffers, a driver-side read that runs no job). A fully
+cached hit is served as is; a whole eviction is re-registered and
+probed with ``take(1)``; a partial loss, or any ``eager`` request on a
+hit that is not fully cached, is re-registered and ``count()``-ed,
+which validates and materializes every partition. A stored flag
+cannot drift from the blocks it describes, so an external
+``clearCache()`` or RDD-level unpersist can't reopen the cache-stampede
+window ``_materialize`` closes.
+
 CORRECTNESS CONTRACT — immutable sources per session: a memo hit
 returns the frame persisted at first build, so if the underlying
 parquet files are REGENERATED mid-session under the same path, hits
@@ -47,17 +59,10 @@ from collections.abc import Callable
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-#: key -> (frame, safe_to_unpersist_on_evict, materialized).
-#: Checkpoint-backed frames (corpus_components) set the unpersist flag
-#: False: unpersisting a truncated-lineage frame a caller still holds
-#: kills it unrecoverably, so eviction only drops the reference and
-#: lets the driver GC reclaim the blocks when the last holder releases
-#: it. ``materialized`` records whether the frame was fully built
-#: (``_materialize``) — an ``eager=True`` request that HITS a lazily
-#: persisted entry must materialize it then, or the stampede fix
-#: silently depends on which query populated the slot first (r13
-#: advice).
-_MEMO: dict[tuple, tuple[DataFrame, bool, bool]] = {}
+#: key -> persisted frame. Nothing else is stored: whether a hit is
+#: live and how deep it must be probed is read from the block manager
+#: at the point of use (``_cached_partitions``).
+_MEMO: dict[tuple, DataFrame] = {}
 _LOCK = threading.Lock()
 #: entries are few and small (signature/assignment tables), but bound
 #: the memo anyway so a long exploratory session can't accumulate
@@ -78,60 +83,73 @@ def _plan_key(source: DataFrame, tag: tuple) -> tuple | None:
         return None
 
 
-def _repin(hit: DataFrame) -> DataFrame | None:
-    """Validate and re-pin a memo hit, or return None if the frame is
-    DEAD and must be rebuilt.
+def _cached_partitions(df: DataFrame) -> tuple[int, int] | None:
+    """``(cached, total)`` partitions of ``df``'s cache buffers, or None
+    when ``df`` is not registered with the CacheManager.
 
-    Two external-eviction cases (bench.py isolates queries with
-    ``clearCache()`` + a blocking unpersist of every RDD):
-    - plain persisted lineage: blocks gone but replayable — re-persist
-      and return it (degrades to the old per-query persist behavior);
-    - ``localCheckpoint``-backed lineage (connected_components, the
-      signature tables): the checkpoint TRUNCATED the lineage, so freed
-      blocks are unrecoverable — any job on the hit throws
-      checkpointRDDBlockIdNotFound (r6 bench: x25/x36/x89 all -1.0).
-      The one-row probe below detects that case cheaply (one partition
-      of a persisted-or-replayable frame, a no-op job when healthy) and
-      the caller rebuilds instead of serving a dead frame.
+    A driver-side read — the CacheManager entry for the plan plus the
+    block status the driver tracks per persisted RDD — so it runs no
+    Spark job: a few ms, against ~150-180 ms for a ``take(1)`` probe
+    job at local[4]."""
+    spark = df.sparkSession
+    data = (
+        spark._jsparkSession.sharedState().cacheManager()
+        .lookupCachedData(df._jdf)
+    )
+    if data.isEmpty():
+        return None
+    buffers = (
+        data.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers()
+    )
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    cached = next(
+        (i.numCachedPartitions() for i in infos if i.id() == buffers.id()), 0
+    )
+    return cached, buffers.getNumPartitions()
 
-    Probe depth: the default take(1) touches one partition, so a
-    PARTIALLY evicted checkpoint-backed frame (some blocks lost,
-    partition 0's survivor intact — possible on multi-executor
-    deployments under executor loss) passes and dies later in the
-    consumer's full scan. In this engine's local-mode deployments every
-    eviction path (clearCache, the bench hygiene unpersist) drops all
-    blocks atomically, so the single-partition probe is exact and the
-    cheap default. Cluster deployments set
-    ``spark.tkes.memo.fullProbe=true`` (session conf, read per probe)
-    to validate EVERY partition with a count() instead — one cheap job
-    over cached blocks when healthy, and the only probe that is exact
-    under partial eviction.
+
+def _serve(key: tuple, hit: DataFrame, eager: bool) -> DataFrame | None:
+    """Serve memo hit ``hit`` for ``key``, or drop the entry and return
+    None when its frame is DEAD and must be rebuilt.
+
+    The probe depth follows the observed block state:
+    - every partition cached → the hit is served with no job;
+    - no partition cached (a whole eviction: ``clearCache()``, or the
+      bench hygiene's RDD-level unpersist) → re-register and ``take(1)``;
+    - some partitions cached (a partial loss, e.g. executor loss), or
+      an ``eager`` request → re-register and ``count()``, which checks
+      every partition and materializes them (see ``_materialize``).
+
+    Re-registering (``unpersist`` + ``persist``) gives the frame fresh
+    cache buffers: an RDD-level unpersist leaves the plan registered
+    with the CacheManager over buffers whose storage level is NONE,
+    which would never cache again. A ``localCheckpoint``-backed
+    lineage (connected_components, the signature tables) cannot be
+    recomputed once its checkpoint blocks are gone — the probe then
+    throws checkpointRDDBlockIdNotFound and the caller rebuilds
+    instead of serving a dead frame (r6 bench: x25/x36/x89 all -1.0).
     """
-    lvl = hit.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        hit.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        full = False
-        try:
-            full = (
-                hit.sparkSession.conf.get(
-                    "spark.tkes.memo.fullProbe", "false"
-                ).lower()
-                == "true"
-            )
-        except Exception:  # noqa: BLE001 — conf lookup is best-effort
-            pass
-        if full:
+        # unregistered (clearCache): nothing cached, never "all cached"
+        cached, total = _cached_partitions(hit) or (0, -1)
+        if cached == total:
+            return hit
+        hit.unpersist()
+        hit.persist(StorageLevel.MEMORY_AND_DISK)
+        if eager or cached:
             hit.count()
         else:
             hit.take(1)
+        return hit
     except Exception:
         try:
             hit.unpersist()
         except Exception:
             pass
+        with _LOCK:
+            if _MEMO.get(key) is hit:
+                del _MEMO[key]
         return None
-    return hit
 
 
 def _materialize(df: DataFrame) -> None:
@@ -153,7 +171,12 @@ def _materialize(df: DataFrame) -> None:
     would have paid anyway, and every consumer then reads cached
     blocks. At 100 TB the same stampede would re-run the dominant
     working-set build once per concurrent consumer, so this is a
-    scale fix, not a local-bench tweak."""
+    scale fix, not a local-bench tweak.
+
+    Errors are swallowed here (the consumer surfaces them). A memo hit
+    is materialized by ``_serve`` instead, whose ``count()`` must raise
+    so that a dead checkpoint-backed frame is rebuilt; whether a hit
+    needs it is read from its cached partitions, never stored."""
     try:
         df.count()
     except Exception:  # noqa: BLE001 — the consumer will surface it
@@ -179,23 +202,14 @@ def peek_memo(source: DataFrame, tag: tuple) -> DataFrame | None:
     if key is None:
         return None
     with _LOCK:
-        entry = _MEMO.get(key)
-    if entry is None:
-        return None
-    hit = entry[0]
-    alive = _repin(hit)
-    if alive is None:
-        with _LOCK:
-            if _MEMO.get(key) is entry:
-                del _MEMO[key]
-    return alive
+        hit = _MEMO.get(key)
+    return None if hit is None else _serve(key, hit, eager=False)
 
 
 def plan_memo(
     source: DataFrame,
     tag: tuple,
     build: Callable[[], DataFrame],
-    unpersist_on_evict: bool = True,
     eager: bool = False,
 ) -> DataFrame:
     """Return a persisted ``build()`` result memoized on
@@ -207,38 +221,26 @@ def plan_memo(
     first-build race both threads build; one result wins the slot and
     the loser's frame is released (its caller gets the winner).
 
-    ``unpersist_on_evict=False``: for builds whose result is
-    localCheckpoint-backed (``corpus_components``) — eviction must NOT
-    unpersist them, because a truncated-lineage frame an earlier caller
-    still holds cannot be recomputed; the reference is simply dropped
-    and the blocks live until the driver GCs the last holder's handle.
+    A hit is served by ``_serve``, which reads the frame's cached
+    partitions from the block manager: a fully cached hit costs no job,
+    an evicted or partially lost one is re-registered and probed, and
+    an ``eager`` request always gets every partition materialized, no
+    matter which consumer populated the slot first (r13 advice).
+
+    Eviction (past ``_MEMO_MAX``) unpersists the frame's cache buffers
+    only. A ``localCheckpoint``-backed result (``corpus_components``)
+    keeps its checkpoint blocks, so an earlier caller still holding it
+    recomputes from them; they live until the driver GCs the last
+    holder's handle.
     """
     key = _plan_key(source, tag)
     if key is not None:
         with _LOCK:
-            entry = _MEMO.get(key)
-        if entry is not None:
-            # captured BEFORE _repin: a frame whose blocks were
-            # externally evicted (storage level dropped) is re-pinned
-            # lazily by _repin, so the stored materialized flag no
-            # longer vouches for its blocks
-            lvl = entry[0].storageLevel
-            was_pinned = lvl.useMemory or lvl.useDisk
-            alive = _repin(entry[0])
+            hit = _MEMO.get(key)
+        if hit is not None:
+            alive = _serve(key, hit, eager)
             if alive is not None:
-                # an eager request must not inherit a lazy entry's
-                # stampede window: materialize the hit NOW and record
-                # it, so the fix applies regardless of which consumer
-                # populated the slot first (r13 advice)
-                if eager and not (entry[2] and was_pinned):
-                    _materialize(alive)
-                    with _LOCK:
-                        if _MEMO.get(key) is entry:
-                            _MEMO[key] = (entry[0], entry[1], True)
                 return alive
-            with _LOCK:
-                if _MEMO.get(key) is entry:
-                    del _MEMO[key]
     out = build().persist(StorageLevel.MEMORY_AND_DISK)
     # ``eager``: fully materialize at build. Right for working sets
     # whose consumers are CONCURRENT AQE jobs (multi-arm queries — the
@@ -251,44 +253,32 @@ def plan_memo(
         _materialize(out)
     if key is None:
         return out
-    # lost-race check OUTSIDE the lock: _repin runs a Spark job, and
+    # lost-race check OUTSIDE the lock: _serve may run a Spark job, and
     # holding the lock across it would serialize every other thread's
     # memo access behind it
     with _LOCK:
         racer = _MEMO.get(key)
-    if racer is not None and racer[0] is not out:
-        alive = _repin(racer[0])
+    if racer is not None and racer is not out:
+        alive = _serve(key, racer, eager)
         if alive is not None:
             # keep the winner canonical; release the loser's duplicate
             try:
                 out.unpersist()
             except Exception:
                 pass
-            # a lost race must still honor THIS caller's eagerness:
-            # the winner may have persisted lazily (r13 advice)
-            if eager and not racer[2]:
-                _materialize(alive)
-                with _LOCK:
-                    if _MEMO.get(key) is racer:
-                        _MEMO[key] = (racer[0], racer[1], True)
             return alive
-        with _LOCK:
-            if _MEMO.get(key) is racer:
-                del _MEMO[key]
-    evicted: list[tuple[DataFrame, bool, bool]] = []
+    evicted: list[DataFrame] = []
     with _LOCK:
         racer = _MEMO.get(key)
-        if racer is not None and racer[0] is not out:
+        if racer is not None and racer is not out:
             # a THIRD racer slipped in while we probed: let it keep the
             # slot; this thread's frame stays a plain persisted frame
             # for its own caller
             return out
         while len(_MEMO) >= _MEMO_MAX:
             evicted.append(_MEMO.pop(next(iter(_MEMO))))
-        _MEMO[key] = (out, unpersist_on_evict, eager)
-    for old, safe, _mat in evicted:
-        if not safe:
-            continue
+        _MEMO[key] = out
+    for old in evicted:
         try:
             old.unpersist()
         except Exception:

@@ -210,7 +210,12 @@ def corpus_shingles_cached(
     table they must first build is a net loss (x77 measured 8.1 s
     forced-shared vs 5.6 s solo at sf1), while reusing one that
     already exists is pure win (one semi-join vs a rep-subset HOF
-    build)."""
+    build).
+
+    A present entry is served at the depth its block state calls for
+    (``_cache._serve``): fully cached costs no job, an evicted one is
+    re-registered and probed with ``take(1)``, a partially lost one is
+    re-registered and ``count()``-ed; a dead one yields None."""
     from twitter_kafka_etl_spark.operators._cache import peek_memo
 
     return peek_memo(df, ("shingles", n, text_col, id_col))
@@ -2169,13 +2174,12 @@ def corpus_components(
         ).persist()
         return connected_components(pairs, nodes=df, id_col=id_col)
 
-    # unpersist_on_evict=False: the result is localCheckpoint-backed
-    # (propagation truncates lineage), so an eviction-time unpersist
-    # would kill the frame for any earlier caller still holding it
-    return plan_memo(
-        df, ("components", n, text_col, id_col), build,
-        unpersist_on_evict=False,
-    )
+    # the result is localCheckpoint-backed (propagation truncates
+    # lineage): memo eviction unpersists only its cache buffers, so an
+    # earlier caller still holding it recomputes from the checkpoint
+    # blocks, and a hit whose checkpoint blocks are gone fails
+    # plan_memo's probe and is rebuilt
+    return plan_memo(df, ("components", n, text_col, id_col), build)
 
 
 def cluster_size_profile(

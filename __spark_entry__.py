@@ -24,7 +24,8 @@ from twitter_kafka_etl_spark.plans import REGISTRY
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: enrich events with sentiment/emotion labels, then the
-    reference's two-branch aggregate (positivity rate ⋈ emotion pivot)."""
+    reference's serving aggregate (positivity rate ⋈ emotion pivot, as
+    one conditional aggregate)."""
     events = read_table(spark, "/root/testdata/sf0.001", "events")
     enriched = enrich_rule_based(
         events.withColumnRenamed("event_type", "topic")
@@ -122,6 +123,11 @@ _REWRITTEN_OPS: dict[str, int] = {
     "operators._cache.plan_memo": 15,
     "operators._cache.peek_memo": 15,
 }
+# NOT registered: pipeline.topic_aggregates (one conditional aggregate
+# instead of a two-branch join) and operators.model_artifact.featurize
+# (one scatter-add per batch) — neither has a registered consumer;
+# entry()'s aggregate is pinned equal to the two-branch join by
+# tests/test_properties.py.
 # NOT registered: _order_files' numeric-aware sort — for every staging
 # the committed queries produce (≤10 single-digit "__f=N" dirs) the
 # numeric and lexicographic orders are identical, so no registered

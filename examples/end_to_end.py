@@ -7,7 +7,7 @@ Maps stage-for-stage onto h-crawshaw/twitter-kafka-etl:
 | Producer: tweet JSON → keyed Kafka messages (twitter_producer.py:30-33,62-64) | stage 1: events → Kafka wire shape (key/value/topic) |
 | Consumer ingest: Kafka → flatten → hourly partitioned raw parquet (consumer.scala:56-82) | stage 2: checkpointed stream → date/hour-partitioned parquet |
 | Batch enrich: Spark-NLP sentiment+emotion (consumer.scala:85-155) | stage 3: Arrow pandas-UDF classifiers over documents' text backed by REAL learned-weight artifacts — two .npz checkpoints (hashed-BoW softmax, trained at pipeline setup) loaded once per worker and scored one matmul per Arrow batch; the plan is identical for a transformers checkpoint |
-| Batch aggregate: positivity ⋈ emotion pivot → Mongo/parquet (consumer.scala:157-188) | stage 4: same two-branch aggregate, dual parquet sinks that both actually save |
+| Batch aggregate: positivity ⋈ emotion pivot → Mongo/parquet (consumer.scala:157-188) | stage 4: same aggregate as one conditional groupBy, dual parquet sinks that both actually save |
 | Viz wrangling: pandas melt/dedup (streamviz/) | stage 5: unpivot → Arrow toPandas hand-off |
 
 Run: ``python examples/end_to_end.py [sf_dir]`` (default sf0.001).

@@ -125,3 +125,53 @@ def test_make_classifier_with_real_weight_artifact(spark, sf_dir, tmp_path):
     # plan shape: Arrow-batched, never row-at-a-time
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
+
+
+def _featurize_per_token(texts, n_buckets):
+    """The per-token loop ``featurize`` replaced, kept as its reference."""
+    import numpy as np
+
+    from twitter_kafka_etl_spark.operators.model_artifact import _bucket
+
+    x = np.zeros((len(texts), n_buckets), dtype=np.float32)
+    for i, t in enumerate(texts):
+        for tok in str(t).split():
+            x[i, _bucket(tok, n_buckets)] += 1.0
+    norms = x.sum(axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return x / norms
+
+
+def test_featurize_scatter_add_equals_per_token_loop(monkeypatch):
+    """The scatter-add kernel builds the same matrix, bit for bit, as
+    the per-token loop, so the trained weights are unchanged too."""
+    import numpy as np
+
+    from twitter_kafka_etl_spark.operators import model_artifact as MA
+
+    words = [f"w{i}" for i in range(12)]
+    texts = [
+        "", None, "   ", "\t\n", "joy",
+        "spam " * 500,  # one token repeated
+        " ".join(words), " ".join(reversed(words)) + " w3 w3 w7",
+        "great fantastic love it", "terrible awful hate it",
+    ]
+    # 12 distinct tokens into 4 buckets: several buckets are shared
+    hits = {}
+    for w in words:
+        hits.setdefault(MA._bucket(w, 4), set()).add(w)
+    assert sum(len(ws) > 1 for ws in hits.values()) >= 2
+    for n_buckets in (4, 64, MA.DEFAULT_BUCKETS):
+        got = MA.featurize(texts, n_buckets)
+        want = _featurize_per_token(texts, n_buckets)
+        assert got.dtype == want.dtype == np.float32
+        assert np.array_equal(got, want)
+    assert MA.featurize([], 8).shape == (0, 8)
+
+    corpus = ["great fantastic love it", "terrible awful hate it", "meh ok fine"] * 5
+    labels = ["positive", "negative", "neutral"] * 5
+    new = MA.train_linear_classifier(corpus, labels, n_buckets=64)
+    monkeypatch.setattr(MA, "featurize", _featurize_per_token)
+    ref = MA.train_linear_classifier(corpus, labels, n_buckets=64)
+    for k in ("W", "b", "classes", "n_buckets"):
+        assert np.array_equal(new[k], ref[k]), k

@@ -312,3 +312,47 @@ def test_stream_plan_tap_captures_inner_batch_plans(
     assert "LeftAnti" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_serve_shape_is_one_pass(spark, sf_dir, tmp_path):
+    """The serving aggregate over learned-weight enrichment runs as one
+    pass: both classifier UDFs in ONE ArrowEvalPython node, one scan of
+    events and one hash shuffle (the groupBy). A join of two per-topic
+    aggregates would prune each branch to one UDF, with its own scans."""
+    from pyspark.sql import functions as F
+
+    from twitter_kafka_etl_spark.operators.model_artifact import (
+        linear_model_backend,
+        save_artifact,
+        train_linear_classifier,
+    )
+    from twitter_kafka_etl_spark.operators.text import enrich_text
+    from twitter_kafka_etl_spark.pipeline import EMOTIONS, SENTIMENTS, topic_aggregates
+
+    backends = []
+    for labels in (SENTIMENTS, EMOTIONS):
+        art = str(tmp_path / f"{labels[0]}.npz")
+        save_artifact(train_linear_classifier(labels * 3, labels * 3), art)
+        backends.append(linear_model_backend(art))
+    raw_docs = read_table(spark, sf_dir, "documents")
+    docs = enrich_text(
+        raw_docs, sentiment_backend=backends[0], emotion_backend=backends[1]
+    )
+    enriched = (
+        read_table(spark, sf_dir, "events")
+        .withColumn("doc_id", F.pmod("event_id", F.lit(raw_docs.count())))
+        .join(F.broadcast(docs.select("doc_id", "sentiment", "emotion")), "doc_id")
+        .withColumnRenamed("event_type", "topic")
+    )
+    serving = topic_aggregates(enriched)
+    assert serving.collect()
+    # after the action AQE prints the final plan, then the initial one
+    plan = (
+        serving._jdf.queryExecution().executedPlan().toString()
+        .split("== Initial Plan ==")[0]
+    )
+    assert plan.count("ArrowEvalPython") == 1, plan
+    arrow = next(l for l in plan.splitlines() if "ArrowEvalPython" in l)
+    assert arrow.count("backend(text") == 2, arrow
+    assert plan.count("events.parquet") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan

@@ -1848,3 +1848,66 @@ def test_wav_decode_matches_samples(samples, rate):
     rms = (sum(s * s for s in samples) / len(samples)) ** 0.5
     assert abs(d["rms"] - rms) < 1e-9
     assert d["duration_ms"] == int(round(1000.0 * len(samples) / rate))
+
+
+def _two_branch_topic_aggregates(enriched, topic_col="topic"):
+    """The reference's shape of the serving aggregate: positivity branch
+    ⋈ explicit-list emotion pivot, broadcast inner join."""
+    from twitter_kafka_etl_spark.functions.scalar import positivity_flag
+    from twitter_kafka_etl_spark.pipeline import EMOTIONS
+
+    rate = R.conditional_rate_agg(
+        enriched, topic_col, positivity_flag("sentiment")
+    ).withColumnRenamed(topic_col, "topic_agg")
+    pivot = R.pivot_explicit(
+        R.count_agg(enriched, [topic_col, "emotion"], "emotion_counts"),
+        topic_col, "emotion", EMOTIONS, F.sum("emotion_counts"), fill=0,
+    )
+    return R.join_tables(
+        rate, pivot, on=rate.topic_agg == pivot[topic_col],
+        how="inner", broadcast_right=True,
+    )
+
+
+def _assert_same_frame(got, want):
+    assert got.columns == want.columns
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+def test_topic_aggregates_equals_two_branch_join(spark, sf_dir):
+    """The one-pass conditional aggregate returns exactly the two-branch
+    join's rows, column order and dtypes: on the flagship input, on a
+    frame with a null topic, a null sentiment, an out-of-set and a null
+    emotion, and with a topic column not named ``topic``."""
+    from twitter_kafka_etl_spark.io import read_table
+    from twitter_kafka_etl_spark.pipeline import enrich_rule_based, topic_aggregates
+
+    events = read_table(spark, sf_dir, "events").withColumnRenamed(
+        "event_type", "topic"
+    )
+    flagship = enrich_rule_based(events)
+    _assert_same_frame(
+        topic_aggregates(flagship), _two_branch_topic_aggregates(flagship)
+    )
+
+    edge = spark.createDataFrame(
+        [
+            ("a", "positive", "joy"),
+            ("a", None, "fear"),
+            ("a", "negative", "rage"),
+            ("a", "positive", None),
+            ("b", "neutral", "rage"),  # only out-of-set emotions: all zeros
+            ("c", None, None),
+            (None, "positive", "joy"),  # null topic: dropped by the join
+            (None, "negative", "love"),
+        ],
+        "topic string, sentiment string, emotion string",
+    )
+    _assert_same_frame(topic_aggregates(edge), _two_branch_topic_aggregates(edge))
+    assert {r.topic_agg for r in topic_aggregates(edge).collect()} == {"a", "b", "c"}
+
+    renamed = flagship.withColumnRenamed("topic", "channel")
+    got = topic_aggregates(renamed, topic_col="channel")
+    assert "channel" in got.columns and "topic" not in got.columns
+    _assert_same_frame(got, _two_branch_topic_aggregates(renamed, topic_col="channel"))

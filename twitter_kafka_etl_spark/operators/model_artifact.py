@@ -46,11 +46,25 @@ def _bucket(token: str, n_buckets: int) -> int:
 
 def featurize(texts, n_buckets: int) -> np.ndarray:
     """(len(texts), n_buckets) float32 count matrix, L1-normalized per
-    row so long documents don't dominate the margin."""
-    x = np.zeros((len(texts), n_buckets), dtype=np.float32)
+    row so long documents don't dominate the margin.
+
+    One scatter-add per batch: each distinct token is hashed once (the
+    dict lives for this call only), the (row, bucket) pairs are
+    collected as index lists and ``np.add.at`` accumulates them. Counts
+    are small integers, exact in float32, so the matrix is the same as
+    a per-token ``x[i, b] += 1`` loop's."""
+    buckets: dict[str, int] = {}
+    rows: list[int] = []
+    cols: list[int] = []
     for i, t in enumerate(texts):
         for tok in str(t).split():
-            x[i, _bucket(tok, n_buckets)] += 1.0
+            b = buckets.get(tok)
+            if b is None:
+                b = buckets[tok] = _bucket(tok, n_buckets)
+            rows.append(i)
+            cols.append(b)
+    x = np.zeros((len(texts), n_buckets), dtype=np.float32)
+    np.add.at(x, (np.array(rows, dtype=np.intp), np.array(cols, dtype=np.intp)), 1.0)
     norms = x.sum(axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return x / norms

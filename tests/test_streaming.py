@@ -7,6 +7,7 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from twitter_kafka_etl_spark.io import read_table
@@ -15,7 +16,7 @@ from twitter_kafka_etl_spark.streaming.stateful import running_user_totals
 
 
 def test_arrival_batches_validated_and_announced(monkeypatch, capsys):
-    """$SPARK_GRAFT_STREAM_BATCHES repoints four registered queries at
+    """$SPARK_GRAFT_STREAM_BATCHES repoints six registered queries at
     a non-oracle arrival schedule, so a leaked probe-shell value must
     be loud (stderr) and n<1 must fail here, not as a downstream
     ZeroDivisionError (r11 advice)."""
@@ -137,6 +138,73 @@ def test_ingest_non_contiguous_id_schedule_matches_oracle(spark, sf_dir):
             assert ok, f"{name} on gapped ids: {msg}"
     finally:
         con.close()
+
+
+INGEST_FOLDS = (
+    "qs12_stream_incremental_dedup",
+    "qs13_stream_drift_monitor",
+    "qs14_stream_novelty",
+    "qs15_stream_heavy_hitters",
+    "qs16_stream_mixture_monitor",
+    "qs17_stream_neardup_ingest",
+)
+
+
+@pytest.mark.parametrize("name", INGEST_FOLDS)
+def test_ingest_fold_exactly_once_under_redelivery(
+    name, spark, sf_dir, oracle_con, monkeypatch
+):
+    """foreachBatch delivery is at-least-once: a batch replayed after a
+    crash between its side-table writes and the checkpoint commit
+    reaches the fold again with the same batch id. Deliver EVERY
+    micro-batch to the fold twice; the folds' per-batch overwrite
+    partitions and own-batch exclusion must leave exactly-once table
+    contents, so each result still hash-matches its oracle."""
+    from twitter_kafka_etl_spark.plans.oracle import compare
+    from twitter_kafka_etl_spark.streaming import sinks
+
+    fanout = sinks.foreach_batch_fanout
+
+    def twice(stream_df, fold_sinks, checkpoint, **kw):
+        doubled = [sink for sink in fold_sinks for _ in range(2)]
+        return fanout(stream_df, doubled, checkpoint, **kw)
+
+    monkeypatch.setattr(sinks, "foreach_batch_fanout", twice)
+    ok, msg = compare(
+        REGISTRY[name].build(spark, sf_dir), oracle_con, REGISTRY[name].oracle
+    )
+    assert ok, f"{name} with every batch delivered twice: {msg}"
+
+
+def test_staged_input_restages_on_regenerated_documents(spark, sf_dir, tmp_path):
+    """The stream-input cache is keyed on the STAGED table's identity: a
+    regenerated documents.parquet at the same path (events.parquet
+    untouched) must restage, not serve the previous corpus's
+    micro-batches. Checked through qs12, whose oracle reads the
+    rewritten table: first half the corpus, then all of it."""
+    import pyarrow.parquet as pq
+
+    from twitter_kafka_etl_spark.plans.oracle import compare, duckdb_connection
+
+    sf = tmp_path / f"sf_restage_{os.getpid()}"
+    sf.mkdir()
+    for name in os.listdir(sf_dir):
+        if name.endswith(".parquet") and name != "documents.parquet":
+            os.symlink(os.path.join(sf_dir, name), sf / name)
+    full = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    spec = REGISTRY["qs12_stream_incremental_dedup"]
+    root = os.path.join(tempfile.gettempdir(), f"tkes_stream_qs12_{sf.name}")
+    try:
+        for docs in (full.slice(0, full.num_rows // 2), full):
+            pq.write_table(docs, sf / "documents.parquet")
+            con = duckdb_connection(str(sf))
+            try:
+                ok, msg = compare(spec.build(spark, str(sf)), con, spec.oracle)
+            finally:
+                con.close()
+            assert ok, f"{docs.num_rows} documents: {msg}"
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_qs1_kafka_shape_roundtrip(spark, sf_dir):

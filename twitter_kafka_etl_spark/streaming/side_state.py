@@ -1,10 +1,11 @@
 """Compaction and visibility of the streaming ingest folds' ``__b=``
 side-state tables.
 
-The incremental ingest queries (qs12/qs14/qs15/qs17) accumulate their
-cross-batch state — fingerprint indexes, shingle indexes, band indexes,
-sketch cells, kept corpora — as one hive partition ``__b=<batch_id>``
-per micro-batch, because per-batch OVERWRITE partitions are what makes
+The id-range ingest folds (qs12–qs17) accumulate their cross-batch
+state — fingerprint indexes, shingle indexes, band indexes, sketch
+cells, kept corpora, monitor counts — as one hive partition
+``__b=<batch_id>`` per micro-batch (``batch_dir``; the folds never spell
+the name themselves), because per-batch OVERWRITE partitions are what makes
 the folds replay-idempotent under foreachBatch's at-least-once delivery
 (each table's write lands outside the checkpoint transaction; see
 queries.py's qs12 ingest comment). The r11 100-batch probe isolated the
@@ -100,6 +101,18 @@ def _every() -> int:
     if n < 2:
         raise ValueError(f"SPARK_GRAFT_SIDE_COMPACT_EVERY={n}: need >= 2")
     return n
+
+
+def _part(batch_id: int) -> str:
+    """The partition dir name of ``batch_id`` — the one place the
+    ``__b=`` format is built (per-batch writes, publishes, snapshots)."""
+    return f"__b={batch_id}"
+
+
+def batch_dir(path: str, batch_id: int) -> str:
+    """The ``__b=<batch_id>`` partition dir of side table ``path``: where
+    a fold's per-batch overwrite lands."""
+    return os.path.join(path, _part(batch_id))
 
 
 def _by_batch(names: Iterable[str]) -> dict[int, str]:
@@ -218,7 +231,7 @@ def _plan_fold(
             fold.append(d)
             total_rows += rows[d]
     gen = 1 + max((-b for b in parts if b < 0), default=0)
-    return fold, f"__b=-{gen}"
+    return fold, _part(-gen)
 
 
 # ---------------------------------------------------------------------------
@@ -373,26 +386,35 @@ def register_batch(path: str, batch_id: int) -> None:
     """Make ``__b=<batch_id>`` visible; set-idempotent on replay."""
     gen, m = _latest_manifest(path)
     parts = set(m["parts"]) if m is not None else set()
-    part = f"__b={batch_id}"
+    part = _part(batch_id)
     if part in parts:
         return  # replay: already visible, nothing to publish
     _publish_manifest(path, gen + 1, sorted(parts | {part}))
 
 
-def read_side(spark: SparkSession, path: str) -> DataFrame:
-    """Read a side-state table's live partitions. ``basePath`` is pinned
-    so the listed leaf dirs still yield the ``__b`` partition column
-    (the folds' own-batch exclusion filters on it)."""
+def read_side(
+    spark: SparkSession, path: str, exclude: int | None = None
+) -> DataFrame:
+    """Read a side-state table's live partitions, without batch
+    ``exclude``'s partition when given. ``basePath`` is pinned so the
+    listed leaf dirs still yield the ``__b`` partition column.
+
+    ``exclude`` is the folds' own-batch exclusion: a batch replayed
+    after a crash between its side-table write and the checkpoint
+    commit must not see its own rows as history. It is a filter on the
+    partition column, so Spark prunes the partition at the scan."""
     live = live_partitions(path)
     if live is None:
-        return spark.read.parquet(path)
-    if not live:
+        df = spark.read.parquet(path)
+    elif not live:
         raise FileNotFoundError(
             f"manifest table {path} has no live partitions"
         )
-    return spark.read.option("basePath", path).parquet(
-        *[os.path.join(path, d) for d in live.values()]
-    )
+    else:
+        df = spark.read.option("basePath", path).parquet(
+            *[os.path.join(path, d) for d in live.values()]
+        )
+    return df if exclude is None else df.filter(F.col("__b") != exclude)
 
 
 def live_rows(path: str) -> int:

@@ -4,10 +4,17 @@ The reference lands the same aggregate in MongoDB *and* Parquet as two
 separate batch writes (consumer.scala:176-187 — the second of which never
 fires, missing ``.save()``). The engine's equivalent is a single
 ``foreachBatch`` stream: each micro-batch DataFrame is delivered to every
-registered sink inside one transactional-ish hook (per-sink idempotence
-comes from (batch_id, sink) bookkeeping at real deployments; here the
-sinks are parquet appends, which availableNow + checkpoint make
-exactly-once).
+registered sink inside one hook.
+
+Delivery is at-least-once: a sink's write lands outside the streaming
+checkpoint transaction, so a batch replayed after a crash between the
+write and the checkpoint commit is delivered again. A parquet append
+sink then holds that batch twice — availableNow + checkpoint do not make
+appends exactly-once. Exactly-once contents need an idempotent sink:
+the ingest folds (queries.py qs12-qs17) overwrite one partition per
+batch (``side_state.batch_dir``), so a replay rewrites instead of
+adding; an external store gets the same from (batch_id, sink)
+bookkeeping (``external_sink``'s ``idempotent_key``).
 
 Scale note: ``foreachBatch`` re-executes the batch plan once per sink
 unless persisted — so the hook persists the batch, fans out, then

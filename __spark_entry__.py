@@ -122,6 +122,10 @@ _REWRITTEN_OPS: dict[str, int] = {
     # consumers.
     "operators._cache.plan_memo": 15,
     "operators._cache.peek_memo": 15,
+    # qs12/qs14's novelty gate is one exact anti-join against the
+    # index (own batch excluded); the Bloom pre-probe, its crossover
+    # and its per-batch footer walk are gone — same kept set.
+    "streaming.queries._novel": 15,
 }
 # NOT registered: pipeline.topic_aggregates (one conditional aggregate
 # instead of a two-branch join) and operators.model_artifact.featurize

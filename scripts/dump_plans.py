@@ -287,9 +287,8 @@ STREAM_SHOWCASE = [
      "distinct shingle hashes LeftAnti-join the accumulated index with "
      "the own-batch partition pruned AT THE SCAN (PartitionFilters: "
      "NOT __b = b — the replay-idempotence exclusion is free). At "
-     "harness scale the index side broadcasts; past the crossover the "
-     "driver-held bloom bitmap pre-probes instead, capping this exact "
-     "path to the FP-rate-bounded candidate set."),
+     "harness scale the index side broadcasts; both join inputs are "
+     "file scans, with no driver-built relation in the plan."),
     ("qs17_stream_neardup_ingest", "qs17_kept",
      "foreachBatch inner plan (steady-state batch): the kept set is "
      "two CHAINED LeftAnti joins off the once-checkpointed "

@@ -11,15 +11,13 @@ what the 100 TB crawl-ingest story rests on:
   ``commits/<k>``'s mtime marks completion — duration_k is their
   difference (the Python StreamingQueryListener is not delivered
   events in this classic-mode deployment, so the checkpoint is the
-  ground truth). The claim is a FLAT slope once the bloom bitmap caps
-  the per-batch index-scan cost;
+  ground truth). The claim is a FLAT slope: each record carries
+  ``slope_ms_per_batch`` (least squares over batches 21 onward, past
+  warm-up) and ``decile_median_ms`` (the medians of ten equal
+  consecutive slices of the run);
 - state growth per batch, read back exactly from the ``__b=<batch>``
   hive partitions each ingest fold writes (parquet footer row counts,
-  no data scan) — the claim is growth linear in KEPT rows only;
-- bloom side-file stats (m, set-bit words, crossover batch) for
-  qs12/qs14 — the crossover is forced mid-run via the documented env
-  overrides so both the pre-crossover anti-join mode and the
-  bitmap-capped mode appear in one run.
+  no data scan) — the claim is growth linear in KEPT rows only.
 
 Usage::
 
@@ -56,10 +54,6 @@ STATE_TABLES = {
     "qs14_stream_novelty": ("shindex", "stats"),
     "qs15_stream_heavy_hitters": ("cells", "raw"),
     "qs17_stream_neardup_ingest": ("corpus", "bandidx"),
-}
-BLOOM_QUERIES = {
-    "qs12_stream_incremental_dedup",
-    "qs14_stream_novelty",
 }
 
 
@@ -104,7 +98,7 @@ def _densify(sf_dir: str) -> None:
       order preserved, so n requested batches = n equal id ranges);
     - each copy>0 document's text gets a ``' v<copy>'`` suffix: an
       exact-dedup ingest (qs12) now sees every copy as NOVEL (state
-      grows linearly across the whole run — the bloom-bitmap stress),
+      grows linearly across the whole run — the index-growth stress),
       while a near-dup ingest (qs17) still rejects them (minhash bands
       collide on the shared prefix — the static-index probe-cost
       stress). The two queries thus cover both growth regimes.
@@ -176,18 +170,26 @@ def _partition_rows(table_dir: str) -> dict:
     return out
 
 
-def _bloom_stats(work: str) -> dict | None:
-    import pyarrow.parquet as pq
+def _trend(per_batch_ms: list[int]) -> dict:
+    """Flat-slope summary of per-batch wall times: the least-squares
+    slope (ms per batch) over batches 21 onward — the first 20 are
+    warm-up — and the medians of ten equal consecutive slices. Batches
+    whose window could not be read (-1) are left out of both."""
+    import numpy as np
 
-    path = os.path.join(work, "bloom.parquet")
-    if not os.path.exists(path):
-        return None
-    t = pq.read_table(path)
-    return {
-        "m_bits": int(t["m"][0].as_py()),
-        "nonzero_words": t.num_rows,
-        "state_bytes": t.num_rows * 12,  # int32 word + int64 bits
-    }
+    ms = np.asarray(per_batch_ms, dtype=float)
+    k = np.arange(1, len(ms) + 1)
+    tail = (ms >= 0) & (k >= 21)
+    slope = (
+        round(float(np.polyfit(k[tail], ms[tail], 1)[0]), 2)
+        if tail.sum() >= 2
+        else None
+    )
+    deciles = [
+        float(np.median(c[c >= 0])) if (c >= 0).any() else None
+        for c in np.array_split(ms, 10)
+    ] if len(ms) >= 10 else []
+    return {"slope_ms_per_batch": slope, "decile_median_ms": deciles}
 
 
 def _batch_windows(ckpt: str) -> list[tuple[int, int]]:
@@ -259,12 +261,6 @@ def main() -> None:
     names = sys.argv[3:] or list(QUERIES)
 
     os.environ["SPARK_GRAFT_STREAM_BATCHES"] = str(n_batches)
-    # force the bloom crossover mid-run so both modes appear in one
-    # run, sized so the bootstrap bitmap (64 bits/key at crossover)
-    # keeps a sane fill as the densified corpus grows the qs12 index
-    # to ~#docs and the qs14 shingle index past it
-    os.environ.setdefault("SPARK_GRAFT_QS12_BLOOM_CROSSOVER", "50000")
-    os.environ.setdefault("SPARK_GRAFT_QS14_BLOOM_CROSSOVER", "200000")
 
     from twitter_kafka_etl_spark.plans import REGISTRY
     from twitter_kafka_etl_spark.session import get_spark
@@ -274,10 +270,6 @@ def main() -> None:
     report: dict = {
         "sf_dir": sf_dir,
         "n_batches": n_batches,
-        "crossover": {
-            "qs12": os.environ["SPARK_GRAFT_QS12_BLOOM_CROSSOVER"],
-            "qs14": os.environ["SPARK_GRAFT_QS14_BLOOM_CROSSOVER"],
-        },
         "queries": {},
     }
     for name in names:
@@ -308,6 +300,7 @@ def main() -> None:
             "result_rows": out_rows,
             "n_batches_ran": len(per_batch),
             "per_batch_ms": per_batch,
+            **_trend(per_batch),
             "per_batch_load1": [
                 sampler.mean_in(s, e) if s >= 0 else None
                 for s, e in windows
@@ -319,8 +312,6 @@ def main() -> None:
                 entry["state_rows_per_batch"][t] = _partition_rows(
                     os.path.join(work, t)
                 )
-            if name in BLOOM_QUERIES:
-                entry["bloom"] = _bloom_stats(work)
         report["queries"][name] = entry
         # hygiene between query runs (bench.py's justification)
         spark.catalog.clearCache()

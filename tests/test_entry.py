@@ -225,12 +225,14 @@ def test_impact_graph_internals():
     assert impact._resolve_from("p.q.r", 3, "s", is_pkg=True) == "p.s"
 
 
-def test_impact_graph_package_init_and_tuple_targets(tmp_path):
-    """Synthetic-module regression tests for the two r10 advisor
-    under-approximation hazards: (a) a relative import inside a
-    package __init__ resolves against the package itself; (b) tuple-
-    unpacking assignments register every bound name as a graph node
-    carrying the value expression's references."""
+def test_impact_graph_package_init_and_tuple_targets(tmp_path, monkeypatch):
+    """Synthetic-module regression tests for three under-approximation
+    hazards: (a) a relative import inside a package __init__ resolves
+    against the package itself; (b) tuple-unpacking assignments
+    register every bound name as a graph node carrying the value
+    expression's references; (c) a top-level class is a node carrying
+    its methods' references, so a builder that uses the class consumes
+    what the methods call."""
     from twitter_kafka_etl_spark.plans import impact
 
     pkg = impact._PKG
@@ -282,6 +284,38 @@ def test_impact_graph_package_init_and_tuple_targets(tmp_path):
     assert f"{tmod}._build_pair" in edges[f"{tmod}.A"]
     assert f"{tmod}._build_pair" in edges[f"{tmod}.B"]
     assert f"{tmod}.A" in edges[f"{tmod}.consumer"]
+    # (c) a class method calls an engine function and a builder uses
+    # the class: consumers_of(that function) must reach the builder
+    eng_path = tmp_path / "engine.py"
+    eng_path.write_text("def probe():\n    return 1\n")
+    cls_src = (
+        f"from {pkg}.engine import probe\n"
+        "class Gate:\n"
+        "    def novel(self):\n"
+        "        return probe()\n"
+        "def builder():\n"
+        "    return Gate().novel()\n"
+    )
+    cls_path = tmp_path / "cls.py"
+    cls_path.write_text(cls_src)
+    cmod = f"{pkg}.cls"
+    monkeypatch.setattr(
+        impact,
+        "_modules",
+        lambda: (
+            {f"{pkg}.engine": str(eng_path), cmod: str(cls_path)},
+            frozenset(),
+        ),
+    )
+    monkeypatch.setattr(
+        impact, "_query_nodes", lambda: {"q_builder": f"{cmod}.builder"}
+    )
+    impact.reference_graph.cache_clear()
+    try:
+        assert impact.consumers_of(f"{pkg}.engine.probe") == {"q_builder"}
+    finally:
+        # the synthetic graph must not outlive this test
+        impact.reference_graph.cache_clear()
 
 
 def test_impact_graph_alias_shadowing_over_approximates(tmp_path):

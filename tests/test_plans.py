@@ -289,20 +289,29 @@ def test_x57_bm25_plan_shape(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
+@pytest.mark.parametrize(
+    "query,tag",
+    [
+        ("qs12_stream_incremental_dedup", "qs12_novel"),
+        ("qs14_stream_novelty", "qs14_novel"),
+    ],
+    ids=["qs12_novel", "qs14_novel"],
+)
 def test_stream_plan_tap_captures_inner_batch_plans(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path, monkeypatch, query, tag
 ):
     """The $SPARK_GRAFT_PLAN_TAP seam (PLANS.md streaming sections)
     must capture the foreachBatch INNER plan, and that plan must show
     the replay-idempotence exclusion as free partition pruning: the
     own-batch __b= partition is eliminated AT THE SCAN
     (PartitionFilters), never as a post-scan filter. Also pins the
-    novelty anti-join as a hash equi-join — no nested-loop fallback."""
+    novelty anti-join as a hash equi-join — no nested-loop fallback —
+    against the index alone, with no driver-shipped sketch relation."""
     import os
 
     monkeypatch.setenv("SPARK_GRAFT_PLAN_TAP", str(tmp_path))
-    REGISTRY["qs14_stream_novelty"].build(spark, sf_dir).count()
-    tapped = os.path.join(str(tmp_path), "qs14_novel.txt")
+    REGISTRY[query].build(spark, sf_dir).count()
+    tapped = os.path.join(str(tmp_path), f"{tag}.txt")
     assert os.path.exists(tapped)
     with open(tapped) as fh:
         plan = fh.read()
@@ -312,6 +321,9 @@ def test_stream_plan_tap_captures_inner_batch_plans(
     assert "LeftAnti" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+    # every join input is a file scan: no LocalTableScan (a sketch
+    # frame built on the driver) feeds the probe
+    assert "LocalTableScan" not in plan
 
 
 def test_serve_shape_is_one_pass(spark, sf_dir, tmp_path):

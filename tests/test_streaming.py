@@ -631,112 +631,6 @@ def test_qs9_stream_static_enrich_matches_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_qs12_bloom_crossover_path_matches_plain(spark, sf_dir, monkeypatch):
-    """Past the crossover, the bloom-probed ingest must produce exactly
-    the plain anti-join's kept set, and must actually maintain the
-    bitmap side-file (the one-sided-error contract: misses skip the
-    index, hits are confirmed by the exact anti-join)."""
-    import glob
-    import tempfile
-
-    from twitter_kafka_etl_spark.plans import REGISTRY
-
-    plain = {
-        (r.doc_id, r.fp)
-        for r in REGISTRY["qs12_stream_incremental_dedup"]
-        .build(spark, sf_dir)
-        .collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_QS12_BLOOM_CROSSOVER", "0")
-    bloomed = {
-        (r.doc_id, r.fp)
-        for r in REGISTRY["qs12_stream_incremental_dedup"]
-        .build(spark, sf_dir)
-        .collect()
-    }
-    assert bloomed == plain and len(plain) > 0
-    # the crossover run left a rolled-forward bitmap side-file behind
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    side = glob.glob(
-        os.path.join(
-            tempfile.gettempdir(),
-            f"tkes_stream_qs12_{sf_name}",
-            f"run_{os.getpid()}",
-            "bloom.parquet",
-        )
-    )
-    assert side, "bloom side-file missing — crossover path never engaged"
-    # restored-bitmap ⊇ landed-index invariant, through the restart seam
-    # (side-file written BEFORE the index/corpus appends — see qs14)
-    from twitter_kafka_etl_spark.operators import sketches as K
-    from twitter_kafka_etl_spark.streaming.queries import (
-        _restore_bloom_sidefile,
-    )
-
-    m, words = _restore_bloom_sidefile(side[0])
-    assert m > 0 and words is not None
-    idx = spark.read.parquet(
-        os.path.join(os.path.dirname(side[0]), "index")
-    ).select("fp")
-    ib = K.bloom_build(idx, "fp", m=m).toPandas()
-    missing = ib["bits"].to_numpy() & ~words[ib["word"].to_numpy()]
-    assert not missing.any(), "index print absent from the restored bitmap"
-
-
-def test_qs14_bloom_crossover_path_matches_plain(spark, sf_dir, monkeypatch):
-    """Past the crossover, the bloom-probed novelty monitor must emit
-    exactly the plain anti-join's per-batch (n_sh, n_novel) curve, and
-    must maintain the bitmap side-file (misses skip the index scan,
-    hits are confirmed by the exact anti-join — counts stay exact)."""
-    import glob
-    import tempfile
-
-    from twitter_kafka_etl_spark.plans import REGISTRY
-
-    plain = {
-        (r.batch, r.n_sh, r.n_novel)
-        for r in REGISTRY["qs14_stream_novelty"].build(spark, sf_dir).collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_QS14_BLOOM_CROSSOVER", "0")
-    bloomed = {
-        (r.batch, r.n_sh, r.n_novel)
-        for r in REGISTRY["qs14_stream_novelty"].build(spark, sf_dir).collect()
-    }
-    assert bloomed == plain and len(plain) > 0
-    # the crossover run left a rolled-forward bitmap side-file behind
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    side = glob.glob(
-        os.path.join(
-            tempfile.gettempdir(),
-            f"tkes_stream_qs14_{sf_name}",
-            f"run_{os.getpid()}",
-            "bloom.parquet",
-        )
-    )
-    assert side, "bloom side-file missing — crossover path never engaged"
-    # invariant the side-file-before-index-append ordering guarantees,
-    # loaded through the RESTART seam itself (_restore_bloom_sidefile):
-    # every hash in the landed index is set in the restored bitmap (the
-    # bitmap may carry EXTRA bits — one-sided error the exact confirm
-    # absorbs — but never miss one, or a restart would undercount
-    # repeats as novel)
-    from twitter_kafka_etl_spark.operators import sketches as K
-    from twitter_kafka_etl_spark.streaming.queries import (
-        _restore_bloom_sidefile,
-    )
-
-    m, words = _restore_bloom_sidefile(side[0])
-    assert m > 0 and words is not None and words.any()
-    idx = spark.read.parquet(
-        os.path.join(os.path.dirname(side[0]), "shindex")
-    ).select("sh_h")
-    ib = K.bloom_build(idx, "sh_h", m=m).toPandas()
-    missing = ib["bits"].to_numpy() & ~words[ib["word"].to_numpy()]
-    assert not missing.any(), "index hash absent from the restored bitmap"
-    # the no-side-file path restores to the cold-start state
-    assert _restore_bloom_sidefile(side[0] + ".absent") == (0, None)
-
-
 def test_qs13_stream_psi_equals_batch_psi(spark, sf_dir):
     """The accumulated micro-batch counts must fold into EXACTLY the
     batch psi_drift rows — the stream/batch equivalence the monitor's

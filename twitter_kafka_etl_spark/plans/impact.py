@@ -10,9 +10,10 @@ missed x66). This module derives it mechanically.
 
 How: an ``ast`` pass over every module in the package builds a
 NAME-REFERENCE graph at top-level-definition granularity — nodes are
-top-level functions and top-level assigned constants, and an edge
-``A -> B`` exists when A's source (body, decorators, defaults, or a
-constant's value expression) references B through any of:
+top-level functions, top-level classes and top-level assigned
+constants, and an edge ``A -> B`` exists when A's source (body,
+decorators, defaults, a class's bases and methods, or a constant's
+value expression) references B through any of:
 
 - a local top-level name (same module),
 - a ``from pkg import symbol`` binding,
@@ -29,10 +30,13 @@ Over-approximation costs at most an extra re-verification slot;
 under-approximation would silently starve a rewritten query of its
 driver re-hash, so the bias is chosen deliberately.
 
+A class is one node carrying every method's references, so whoever
+names the class (constructs it, subclasses it, passes it) reaches all
+of them — instance-method calls need no resolution of their own.
+
 Out of scope (documented, not silent): dynamic dispatch through
-strings (``getattr``, registry-name lookups) and instance-method
-resolution — the engine has neither in operator code (functions all
-the way down); if one ever appears, its consumers need a manual
+strings (``getattr``, registry-name lookups) — the engine has none in
+operator code; if one ever appears, its consumers need a manual
 ``_REWRITTEN_IN`` entry.
 
 Nested builders (the ``_register_qs15()`` pattern, where the
@@ -129,6 +133,11 @@ def _resolve_from(
     return ".".join(base + ([target] if target else []))
 
 
+#: top-level statements that define one named graph node; a class's
+#: node carries its methods' references
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
 class _ModuleScan:
     def __init__(
         self,
@@ -174,7 +183,7 @@ class _ModuleScan:
         # graph nodes come from the top level ONLY: nested defs and
         # assigns attribute to their enclosing top-level definition
         for node in self.tree.body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if isinstance(node, _DEFS):
                 self.local_defs.add(node.name)
             elif isinstance(node, ast.Assign):
                 for t in node.targets:
@@ -209,7 +218,7 @@ class _ModuleScan:
     def edges(self) -> dict[str, set[str]]:
         out: dict[str, set[str]] = {}
         for node in self.tree.body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if isinstance(node, _DEFS):
                 out.setdefault(f"{self.mod}.{node.name}", set()).update(
                     self._refs(node)
                 )

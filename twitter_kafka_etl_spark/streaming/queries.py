@@ -466,159 +466,27 @@ def _run_fold(
     ).awaitTermination()
 
 
-def _restore_bloom_sidefile(bloom_file: str):
-    """Load a novelty gate's durable bloom bitmap from its parquet
-    side-file: ``(m, words)`` with ``words`` a dense int64 array, or
-    ``(0, None)`` when no usable side-file exists. The restart seam of
-    ``_BloomGate`` — written before every index append, so the restored
-    bitmap is always a superset of the landed index's keys (extra bits
-    are absorbed by the exact confirm; missing bits would break 'bloom
-    miss = definitely novel')."""
-    import numpy as np
-    import pandas as pd
-
-    from twitter_kafka_etl_spark.operators import sketches as K
-
-    if not os.path.exists(bloom_file):
-        return 0, None
-    prev = pd.read_parquet(bloom_file)
-    if not len(prev):
-        return 0, None
-    m = int(prev["m"].iloc[0])
-    words = np.zeros(m // K.BLOOM_WORD, dtype=np.int64)
-    words[prev["word"].to_numpy()] = prev["bits"].to_numpy()
-    return m, words
-
-
-class _BloomGate:
+def _novel(
+    frame: DataFrame, index: str, key: str, batch_id: int, tag: str
+) -> DataFrame:
     """Novelty gate of the exact ingest folds (qs12: document
-    fingerprints, qs14: shingle hashes): ``novel`` drops the rows of a
-    batch whose ``key`` the accumulated ``index`` side table already
-    holds, with the bloom pre-probe (x33's engine-portable sketch)
-    switched on by a crossover rule IN CODE.
+    fingerprints, qs14: shingle hashes): ``frame``'s rows whose ``key``
+    the accumulated ``index`` side table does not hold, the own batch's
+    partition excluded (replay-idempotent), pinned by
+    ``localCheckpoint``. ``tag`` names the plan tap."""
+    from twitter_kafka_etl_spark.streaming.side_state import read_side
 
-    While the index is broadcast-sized, each batch's plain anti-join
-    against it is optimal — the probe's extra exchanges would only add
-    fixed per-micro-batch cost (measured +3.5 s over 4 harness batches
-    on qs12). Once the index outgrows ``$<crossover_env>`` rows (default
-    10M ≈ the ~160 MB broadcast ceiling at 16 B/key; the tests force 0
-    to exercise the bloom path end to end), the bitmap is bootstrapped
-    ONCE from the index it replaces and then carried across batches
-    driver-side as a dense word vector (≤ m/32 int64 words, KB–MB of
-    driver state forever) with a durable parquet side-file for restart.
-    Later batches consult the always-tiny bitmap first: bloom misses are
-    DEFINITE non-members and skip the index entirely; only hits — true
-    repeats plus the one-sided false positives — go through the exact
-    anti-join confirm, so the kept rows and counts stay exact in both
-    modes. This caps the per-batch index-scan cost that otherwise grows
-    linearly with history.
-
-    The side-file restore never fires in the registered harness
-    (``_staged_input`` hands every run a freshly wiped work dir); it is
-    the restart hook for the production pattern the folds model, where
-    an ingest job resumes its own long-lived work dir."""
-
-    def __init__(
-        self, index: str, key: str, bloom_file: str, crossover_env: str
-    ) -> None:
-        self.index, self.key, self.bloom_file = index, key, bloom_file
-        self.crossover = int(os.environ.get(crossover_env, "10000000"))
-        self.m, self.words = _restore_bloom_sidefile(bloom_file)
-
-    def _set_words(self):
-        """The bitmap's non-zero words as a (word, bits) pandas frame —
-        the probe's sketch rows and the side-file's content."""
-        import numpy as np
-        import pandas as pd
-
-        nz = np.flatnonzero(self.words)
-        return pd.DataFrame({"word": nz.astype("int32"), "bits": self.words[nz]})
-
-    def _or_in(self, keys: DataFrame) -> None:
-        """OR the bloom bits of ``keys`` into the driver-held bitmap."""
-        from twitter_kafka_etl_spark.operators import sketches as K
-
-        bits = K.bloom_build(keys, self.key, m=self.m).toPandas()
-        self.words[bits["word"].to_numpy()] |= bits["bits"].to_numpy()
-
-    def novel(self, frame: DataFrame, batch_id: int, tag: str) -> DataFrame:
-        """``frame``'s rows whose key is not in the index (the own
-        batch's partition excluded — replay-idempotent), pinned by
-        ``localCheckpoint``. Past the crossover the bitmap is rolled
-        forward and its side-file rewritten before this returns, i.e.
-        before the caller's index append. ``tag`` names the plan tap."""
-        import numpy as np
-
-        from twitter_kafka_etl_spark.operators import sketches as K
-        from twitter_kafka_etl_spark.streaming.side_state import (
-            live_rows,
-            read_side,
-        )
-
-        s, k = frame.sparkSession, self.key
-
-        def seen() -> DataFrame:
-            return read_side(s, self.index, exclude=batch_id).select(k)
-
-        has_index = os.path.exists(self.index)
-        # once the bitmap exists it is authoritative: recounting the
-        # growing index's footers every micro-batch would reintroduce
-        # the per-batch linear-in-history cost the bloom exists to cap,
-        # so the footer walk runs only pre-crossover, and its one
-        # result feeds both the decision and the bootstrap sizing
-        if self.words is None and has_index:
-            n_index = live_rows(self.index)
-            if n_index > self.crossover:
-                # crossover bootstrap: ~64 bits per current key = 4x
-                # growth headroom at <1% FP before a rebuild (in
-                # production m comes from capacity planning); one index
-                # scan, paid once, never again
-                m = max(K.BLOOM_M, 64 * n_index)
-                self.m = m + (-m) % K.BLOOM_WORD
-                self.words = np.zeros(self.m // K.BLOOM_WORD, dtype=np.int64)
-                self._or_in(seen())
-        if self.words is not None:
-            sketch = s.createDataFrame(self._set_words(), "word int, bits long")
-            hits = K.bloom_probe(sketch, frame.select(k), k, m=self.m)
-            flagged = (
-                frame.join(hits, k, "left")
-                .withColumn("__candidate", F.coalesce("bloom_hit", F.lit(False)))
-                .drop("bloom_hit")
-            )
-            # confirm step: ONLY bloom-hit candidates consult the index.
-            # Split-then-union rather than a conditional left join — a
-            # `(key-match AND left-only-flag)` join condition cannot
-            # prune the index side, so it scanned AND shuffled the whole
-            # index against every batch row. With the split, the
-            # anti-join's stream side is the (tiny, FP-rate-bounded)
-            # candidate set: AQE broadcasts it and the index scan never
-            # shuffles; definite non-members bypass the index read.
-            cand = flagged.filter(F.col("__candidate")).drop("__candidate")
-            miss = flagged.filter(~F.col("__candidate")).drop("__candidate")
-            frame = miss.unionByName(cand.join(seen(), k, "left_anti"))
-        elif has_index:
-            frame = frame.join(seen(), k, "left_anti")
-        # localCheckpoint, NOT persist: the novel set feeds the index
-        # append, whose plan would re-list the index — a cache can't pin
-        # a file source (the refreshed listing changes the plan, missing
-        # the cache), so a re-run anti-joins the batch against its own
-        # just-written keys and keeps nothing. The checkpoint cuts
-        # lineage, freezing the rows before any write.
-        _tap_frame(frame, tag)
-        frame = frame.localCheckpoint(eager=True)
-        if self.words is not None:
-            # roll forward, then rewrite the durable side-file driver-
-            # side — BEFORE the index append: the bitmap's one-sided
-            # error must stay "bit set but key absent" (a false positive
-            # the exact confirm absorbs), never "key in the index but
-            # bit clear" (a false miss would re-admit an indexed key
-            # after restart). A crash between the two commits leaves
-            # extra bits, and a replayed batch re-ORs idempotently.
-            self._or_in(frame.select(k))
-            self._set_words().assign(m=np.int64(self.m)).to_parquet(
-                self.bloom_file
-            )
-        return frame
+    if os.path.exists(index):
+        seen = read_side(frame.sparkSession, index, exclude=batch_id)
+        frame = frame.join(seen.select(key), key, "left_anti")
+    # localCheckpoint, NOT persist: the novel set feeds the index
+    # append, whose plan would re-list the index — a cache can't pin
+    # a file source (the refreshed listing changes the plan, missing
+    # the cache), so a re-run anti-joins the batch against its own
+    # just-written keys and keeps nothing. The checkpoint cuts
+    # lineage, freezing the rows before any write.
+    _tap_frame(frame, tag)
+    return frame.localCheckpoint(eager=True)
 
 
 def _state_partitions(df: DataFrame, big_rows: int = 500_000) -> int:
@@ -1346,12 +1214,6 @@ def qs12(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = os.path.join(work, "corpus")
     index = os.path.join(work, "index")
-    gate = _BloomGate(
-        index,
-        "fp",
-        os.path.join(work, "bloom.parquet"),
-        "SPARK_GRAFT_QS12_BLOOM_CROSSOVER",
-    )
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
@@ -1366,10 +1228,9 @@ def qs12(spark: SparkSession, sf_dir: str) -> DataFrame:
         # probe isolated the one growing per-batch cost term to the
         # listing/footer walk over the accumulating partition dirs
         # (+9-10 ms/batch at 100 dirs — SURVEY §6), and the index is
-        # what every batch lists (the anti-join plus the pre-crossover
-        # footer walk); every N committed deltas roll into a
-        # checksum-gated snapshot partition, capping the live dir
-        # count. The CORPUS is deliberately not folded inline — it is
+        # what every batch lists (the novelty anti-join); every N
+        # committed deltas roll into a checksum-gated snapshot
+        # partition, capping the live dir count. The CORPUS is deliberately not folded inline — it is
         # a write-only landed layer (full document text, read only at
         # serve time), exactly the shape side_state.py's call
         # discipline routes to offline x55 maintenance. Never triggers
@@ -1392,19 +1253,20 @@ def qs12(spark: SparkSession, sf_dir: str) -> DataFrame:
         # idempotent-sink contract Structured Streaming's own file sink
         # implements via its metadata log.
         w = Window.partitionBy("fp").orderBy("doc_id")
-        novel = gate.novel(
+        novel = _novel(
             batch_df.withColumn("fp", F.md5("text"))
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn"),
+            index,
+            "fp",
             batch_id,
             "qs12_novel",
         )
 
         # index and corpus appends: independent idempotent overwrites
         # of different tables off the checkpointed novel set — submit
-        # concurrently (guide §2.6). The gate's bloom side-file landed
-        # strictly BEFORE both.
+        # concurrently (guide §2.6).
         def _w_index() -> None:
             novel.select("doc_id", "fp").write.mode("overwrite").parquet(
                 batch_dir(index, batch_id)
@@ -1510,13 +1372,11 @@ _register_qs13()
     "index (set-membership HISTORY at shingle granularity — qs12 keeps "
     "doc fingerprints, this keeps content hashes), novel hashes append "
     "to the index, and the per-batch (n_sh, n_novel) row is the "
-    "diminishing-returns curve a crawl publishes as it runs; past a "
-    "crossover index size a driver-held bloom bitmap pre-probes each "
-    "batch (misses skip the index scan, hits get an exact anti-join "
-    "confirm — qs12's pattern at shingle granularity, counts exact in "
-    "both modes); batches arrive in doc_id order so novelty-by-batch "
-    "equals the batch first-occurrence computation exactly; oracle "
-    "form: min-batch per shingle hash over id-range buckets",
+    "diminishing-returns curve a crawl publishes as it runs (qs12's "
+    "exact anti-join pattern at shingle granularity); batches arrive in "
+    "doc_id order so novelty-by-batch equals the batch first-occurrence "
+    "computation exactly; oracle form: min-batch per shingle hash over "
+    "id-range buckets",
     """
     WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
     sh AS (
@@ -1552,14 +1412,6 @@ def qs14(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     index = os.path.join(work, "shindex")
     stats = os.path.join(work, "stats")
-    # qs12's gate one granularity deeper (r6 verdict item 3): the
-    # crossover is counted in shingle hashes
-    gate = _BloomGate(
-        index,
-        "sh_h",
-        os.path.join(work, "bloom.parquet"),
-        "SPARK_GRAFT_QS14_BLOOM_CROSSOVER",
-    )
 
     def monitor(batch_df: DataFrame, batch_id: int) -> None:
         from twitter_kafka_etl_spark.streaming.side_state import (
@@ -1569,11 +1421,10 @@ def qs14(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         # fold-start compaction of the shingle INDEX only (see qs12's
-        # ingest comment): every batch anti-joins against it and the
-        # pre-crossover footer walk counts it, so its dir count lands
-        # on every micro-batch plan; the STATS table (one row per
-        # batch, read only at serve) is a write-only landed layer per
-        # side_state.py's call discipline
+        # ingest comment): every batch anti-joins against it, so its
+        # dir count lands on every micro-batch plan; the STATS table
+        # (one row per batch, read only at serve) is a write-only
+        # landed layer per side_state.py's call discipline
         maybe_compact(batch_df.sparkSession, index, batch_id)
         # batch label from the DATA (the id-range bucket every row of
         # this file shares), not the engine's batch counter — restart-
@@ -1588,13 +1439,13 @@ def qs14(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # one tiny batch: the distinct set feeds the count, the
         # novelty gate AND the index append — localCheckpoint for the
-        # same re-list reason as the gate's own checkpoint
+        # same re-list reason as _novel's own checkpoint
         sh = sh.localCheckpoint(eager=True)
         # own-batch partition excluded from the novelty read + per-batch
         # overwrite partitions below: idempotent under replay, same
         # reasoning as qs12's ingest (round-5 advice — the appends land
         # outside the checkpoint transaction)
-        novel = gate.novel(sh, batch_id, "qs14_novel")
+        novel = _novel(sh, index, "sh_h", batch_id, "qs14_novel")
         row = (
             sh.groupBy("bk")
             .agg(F.count(F.lit(1)).alias("n_sh"))
@@ -1612,8 +1463,7 @@ def qs14(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # stats row and index append: independent idempotent overwrites
         # of different tables off the two checkpointed frames — submit
-        # concurrently (guide §2.6). The gate's bloom side-file landed
-        # strictly BEFORE the index append.
+        # concurrently (guide §2.6).
         def _w_stats() -> None:
             row.write.mode("overwrite").parquet(batch_dir(stats, batch_id))
 
@@ -1988,8 +1838,8 @@ def _register_qs17() -> None:
             else:
                 kept = novel
             # pin before the two appends (the re-list footgun of
-            # _BloomGate.novel: the first append extends the file source
-            # the second plan would re-list). Project to the three columns the appends
+            # _novel: the first append extends the file source the
+            # second plan would re-list). Project to the three columns the appends
             # read BEFORE pinning: text rides along only to feed the
             # band build (already done, off the novel checkpoint), so
             # materializing it here paid the batch's full text payload

@@ -126,12 +126,20 @@ _REWRITTEN_OPS: dict[str, int] = {
     # index (own batch excluded); the Bloom pre-probe, its crossover
     # and its per-batch footer walk are gone — same kept set.
     "streaming.queries._novel": 15,
+    # qs17 keeps one side table: the kept corpus carries each doc's
+    # MinHash bands inline, so a batch compacts, checkpoints and
+    # writes once — same kept set (its only consumer is qs17).
+    "streaming.queries._register_qs17": 15,
 }
 # NOT registered: pipeline.topic_aggregates (one conditional aggregate
 # instead of a two-branch join) and operators.model_artifact.featurize
 # (one scatter-add per batch) — neither has a registered consumer;
 # entry()'s aggregate is pinned equal to the two-branch join by
 # tests/test_properties.py.
+# NOT registered: dedup.shingle/minhash_signatures/band_rows' new
+# keywords (a column-list id_col, outer=, nested=) — at their defaults
+# the plans of every other consumer are unchanged (same optimized-plan
+# semantic hash as before).
 # NOT registered: _order_files' numeric-aware sort — for every staging
 # the committed queries produce (≤10 single-digit "__f=N" dirs) the
 # numeric and lexicographic orders are identical, so no registered

@@ -291,14 +291,15 @@ STREAM_SHOWCASE = [
      "file scans, with no driver-built relation in the plan."),
     ("qs17_stream_neardup_ingest", "qs17_kept",
      "foreachBatch inner plan (steady-state batch): the kept set is "
-     "two CHAINED LeftAnti joins off the once-checkpointed "
-     "window-deduped batch (r14: the window subtree runs exactly once "
-     "per trigger, in the novel checkpoint — this plan starts from its "
+     "two CHAINED LeftAnti joins off the once-checkpointed novel frame "
+     "(the window dedup and the MinHash bands build in one pass with "
+     "one exchange, checkpointed once — this plan starts from its "
      "ExistingRDD scan) — exact fp vs the kept corpus, then doc_ids "
-     "with a (band, sig) LeftSemi hit vs the band index — both side "
-     "scans with the own-batch partition pruned (PartitionFilters: "
-     "NOT __b = b); every join is an equi-join, no pair enumeration "
-     "anywhere."),
+     "with a (band, sig) LeftSemi hit vs the bands the same corpus "
+     "stores inline (inline-exploded on both sides) — both scans of "
+     "the one side table with the own-batch partition pruned "
+     "(PartitionFilters: NOT __b = b); every join is an equi-join, no "
+     "pair enumeration anywhere."),
     ("qs3_stream_watermark_late_drop", "qs3_sink",
      "Per-trigger plan of the watermarked sliding-window agg: "
      "EventTimeWatermark directly over the file-source scan (late "

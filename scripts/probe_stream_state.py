@@ -53,7 +53,7 @@ STATE_TABLES = {
     "qs12_stream_incremental_dedup": ("index", "corpus"),
     "qs14_stream_novelty": ("shindex", "stats"),
     "qs15_stream_heavy_hitters": ("cells", "raw"),
-    "qs17_stream_neardup_ingest": ("corpus", "bandidx"),
+    "qs17_stream_neardup_ingest": ("corpus",),
 }
 
 

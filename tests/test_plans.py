@@ -294,8 +294,9 @@ def test_x57_bm25_plan_shape(spark, sf_dir):
     [
         ("qs12_stream_incremental_dedup", "qs12_novel"),
         ("qs14_stream_novelty", "qs14_novel"),
+        ("qs17_stream_neardup_ingest", "qs17_kept"),
     ],
-    ids=["qs12_novel", "qs14_novel"],
+    ids=["qs12_novel", "qs14_novel", "qs17_kept"],
 )
 def test_stream_plan_tap_captures_inner_batch_plans(
     spark, sf_dir, tmp_path, monkeypatch, query, tag
@@ -306,7 +307,8 @@ def test_stream_plan_tap_captures_inner_batch_plans(
     own-batch __b= partition is eliminated AT THE SCAN
     (PartitionFilters), never as a post-scan filter. Also pins the
     novelty anti-join as a hash equi-join — no nested-loop fallback —
-    against the index alone, with no driver-shipped sketch relation."""
+    against the side table alone, with no driver-shipped sketch
+    relation."""
     import os
 
     monkeypatch.setenv("SPARK_GRAFT_PLAN_TAP", str(tmp_path))

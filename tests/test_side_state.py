@@ -451,8 +451,8 @@ def test_qs12_with_live_compaction_matches_oracle(
 def test_qs17_with_live_compaction_matches_oracle(
     spark, sf_dir, oracle_con, monkeypatch
 ):
-    """Same end-to-end gate for the near-dup ingest: both its side
-    tables (kept corpus + band index) compact mid-stream and the
+    """Same end-to-end gate for the near-dup ingest: its one side
+    table (the kept corpus, bands inline) compacts mid-stream and the
     4-level recursion oracle still matches exactly."""
     _assert_live_compaction_matches_oracle(
         spark, sf_dir, oracle_con, monkeypatch,

@@ -207,6 +207,34 @@ def test_staged_input_restages_on_regenerated_documents(spark, sf_dir, tmp_path)
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_staged_input_run_dir_removed_at_exit(tmp_path):
+    """A process that builds a streaming query leaves no run dir
+    behind: its ``run_<pid>`` sink + checkpoint dir is removed at exit,
+    while the cached staged input stays for the next process."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from twitter_kafka_etl_spark.streaming.queries import _staged_input\n"
+        "in_dir, run = _staged_input(os.environ['SF'], 'atexit', 'v1',"
+        " lambda d: os.makedirs(os.path.join(d, '__f=0')))\n"
+        "print(in_dir)\n"
+        "print(run)\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), SF=str(tmp_path / "sf_x"))
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, check=True,
+        capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ).stdout.split()
+    in_dir, run = out[-2:]
+    assert os.path.basename(run).startswith("run_")
+    assert run.startswith(str(tmp_path))
+    assert not os.path.exists(run)
+    assert os.path.isdir(in_dir)
+
+
 def test_qs1_kafka_shape_roundtrip(spark, sf_dir):
     out = REGISTRY["qs1_stream_kafka_shape"].build(spark, sf_dir)
     rows = out.collect()

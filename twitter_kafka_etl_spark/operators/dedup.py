@@ -104,10 +104,19 @@ def exact_duplicates(
     )
 
 
+def _ids(id_col: str | Sequence[str]) -> list[str]:
+    return [id_col] if isinstance(id_col, str) else list(id_col)
+
+
 def shingle(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame,
+    n: int = 3,
+    text_col: str = "text",
+    id_col: str | Sequence[str] = "doc_id",
+    outer: bool = False,
 ) -> DataFrame:
-    """Distinct word n-gram shingles as a long (id, shingle) table.
+    """Distinct word n-gram shingles as a long (id, shingle) table;
+    ``outer=True`` keeps a sub-``n``-token doc as one null shingle.
 
     Built with JVM-side array ops: transform over a 0..len-n index
     sequence, then explode. No Python, no UDF.
@@ -125,8 +134,9 @@ def shingle(
     is exactly the shuffle this design avoids.
     """
     toked, grams = _gram_array(df, n, text_col)
+    explode = F.explode_outer if outer else F.explode
     return toked.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle")
+        *_ids(id_col), explode(F.array_distinct(grams)).alias("shingle")
     )
 
 
@@ -153,7 +163,7 @@ def _gram_array(df: DataFrame, n: int, text_col: str):
 
 def minhash_signatures(
     shingled: DataFrame,
-    id_col: str = "doc_id",
+    id_col: str | Sequence[str] = "doc_id",
     params: Sequence[tuple[int, int]] | None = None,
 ) -> DataFrame:
     """k MinHash values per document: min((a*h + b) mod p) per hash fn.
@@ -163,14 +173,13 @@ def minhash_signatures(
     referenced directly inside the k min() expressions it is evaluated
     k times per row (2× the whole signature pass at sf1, k=16)."""
     params = list(params or hash_params())
-    pre = shingled.select(
-        F.col(id_col), token_hash(F.col("shingle")).alias("__h")
-    )
+    ids = _ids(id_col)
+    pre = shingled.select(*ids, token_hash(F.col("shingle")).alias("__h"))
     aggs = [
         F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MERSENNE).alias(f"mh{i}")
         for i, (a, b) in enumerate(params)
     ]
-    return pre.groupBy(id_col).agg(*aggs)
+    return pre.groupBy(*ids).agg(*aggs)
 
 
 def corpus_shingles(
@@ -253,17 +262,19 @@ def corpus_signatures(
 
 def band_rows(
     signatures: DataFrame,
-    id_col: str = "doc_id",
+    id_col: str | Sequence[str] = "doc_id",
     n_bands: int = N_BANDS,
     rows_per_band: int = ROWS_PER_BAND,
+    nested: bool = False,
 ) -> DataFrame:
     """Unpivot a MinHash signature table to ``(id, band, sig)`` rows —
     the LSH bucket keys. Produced by a single explode over an array of
     per-band structs — ONE scan of the signature table, not an
     ``n_bands``-way union (each union branch re-evaluates the upstream
     plan; at sf1 the union form re-ran the shingle+signature subtree
-    four times). Shared by the banded pair join and the incremental
-    band-index ingest (qs17)."""
+    four times). ``nested=True`` keeps the array as one ``bands``
+    column per id instead, empty for a null (shingle-less) signature —
+    qs17 stores it inline in its kept corpus."""
     band_structs = F.array(
         *[
             F.struct(
@@ -279,10 +290,14 @@ def band_rows(
             for b in range(n_bands)
         ]
     )
+    ids = _ids(id_col)
+    if nested:
+        bands = F.when(F.col("mh0").isNotNull(), band_structs).otherwise(F.array())
+        return signatures.select(*ids, bands.alias("bands"))
     return signatures.select(
-        F.col(id_col), F.explode(band_structs).alias("__bs")
+        *ids, F.explode(band_structs).alias("__bs")
     ).select(
-        F.col(id_col),
+        *ids,
         F.col("__bs.band").alias("band"),
         F.col("__bs.sig").alias("sig"),
     )

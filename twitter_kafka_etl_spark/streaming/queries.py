@@ -24,6 +24,7 @@ re-reads a directory).
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -95,6 +96,10 @@ def _order_files(in_dir: str) -> None:
                 os.utime(os.path.join(root_, f), (base + i * 60, base + i * 60))
 
 
+#: run dirs this process created, each with one exit-time removal
+_OWN_RUNS: set[str] = set()
+
+
 def _staged_input(
     sf_dir: str, tag: str, version: str, writer, table: str = "events"
 ) -> tuple[str, str]:
@@ -115,6 +120,8 @@ def _staged_input(
     The run dir (sink out + checkpoint) is per-PID and wiped per call:
     streaming state/offsets must start fresh for availableNow
     determinism, and that part costs one empty mkdir, not a data write.
+    It is removed again when the process exits; ``_reap_stale_runs``
+    covers a process killed before its exit handlers ran.
     """
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     root = os.path.join(tempfile.gettempdir(), f"tkes_stream_{tag}_{sf_name}")
@@ -144,6 +151,9 @@ def _staged_input(
     run = os.path.join(root, f"run_{os.getpid()}")
     shutil.rmtree(run, ignore_errors=True)
     os.makedirs(run, exist_ok=True)
+    if run not in _OWN_RUNS:
+        _OWN_RUNS.add(run)
+        atexit.register(shutil.rmtree, run, ignore_errors=True)
     return in_dir, run
 
 
@@ -1689,8 +1699,8 @@ def qs16(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# QS17 — incremental NEAR-dup ingest: exact fp + MinHash band index vs
-# accumulated KEPT history (qs12's pattern lifted from exact to near-dup)
+# QS17 — incremental NEAR-dup ingest: exact fp + MinHash bands vs the
+# accumulated KEPT corpus (qs12's pattern lifted from exact to near-dup)
 # ---------------------------------------------------------------------------
 def _register_qs17() -> None:
     from twitter_kafka_etl_spark.plans.extensions import (
@@ -1728,8 +1738,8 @@ def _register_qs17() -> None:
         "incremental NEAR-dup ingest: each arriving batch is deduped "
         "within itself (min doc_id per md5 fingerprint), then rejected "
         "if its fingerprint OR any of its 4 MinHash band buckets "
-        "matches the accumulated index of EARLIER-KEPT documents; "
-        "survivors append their fingerprint+bands to the index — "
+        "matches the accumulated corpus of EARLIER-KEPT documents; "
+        "survivors land in that corpus with their fingerprint+bands — "
         "qs12's crawl-ingest pattern lifted from exact to near-dup, "
         "with state = (16 B fp + 4 band keys) per KEPT doc, not a "
         "state store; sub-shingle docs carry no bands and pass only "
@@ -1770,8 +1780,9 @@ def _register_qs17() -> None:
         in_dir, work, width = _stage_id_range(
             sf_dir, "qs17", "documents", docs, "doc_id"
         )
+        # the ONE side table: every kept doc with its fingerprint and
+        # its MinHash bands inline (empty for a sub-shingle doc)
         corpus = os.path.join(work, "corpus")
-        bandidx = os.path.join(work, "bandidx")
 
         def ingest(batch_df: DataFrame, batch_id: int) -> None:
             from twitter_kafka_etl_spark.streaming.side_state import (
@@ -1781,91 +1792,59 @@ def _register_qs17() -> None:
             )
 
             s = batch_df.sparkSession
-            # fold-start side-state compaction of the kept corpus and
-            # band index (see qs12's ingest comment): caps the
-            # per-batch partition listing walk the r11 probe isolated
+            # fold-start side-state compaction of the kept corpus (see
+            # qs12's ingest comment): caps the per-batch partition
+            # listing walk the r11 probe isolated
             maybe_compact(s, corpus, batch_id)
-            maybe_compact(s, bandidx, batch_id)
-            # within-batch exact dedup, batch label from the DATA
-            fp = batch_df.select(
-                "doc_id",
-                (F.col("doc_id") / width).cast("bigint").alias("batch"),
-                F.md5("text").alias("fp"),
-                "text",
-            )
+            # within-batch exact dedup, batch label from the DATA, then
+            # the bands of the survivors: the min-hash aggregate groups
+            # by (doc_id, batch, fp), which the window's fp exchange
+            # already clusters, so the whole build is one shuffle
+            key = ["doc_id", "batch", "fp"]
             w_ = Window.partitionBy("fp").orderBy("doc_id")
-            novel = (
-                fp.withColumn("__rn", F.row_number().over(w_))
+            deduped = (
+                batch_df.select(
+                    "doc_id",
+                    (F.col("doc_id") / width).cast("bigint").alias("batch"),
+                    F.md5("text").alias("fp"),
+                    "text",
+                )
+                .withColumn("__rn", F.row_number().over(w_))
                 .filter(F.col("__rn") == 1)
-                .drop("__rn")
             )
-            # pin the window dedup ONCE: novel feeds both the band build
-            # and the kept-set joins, and without this checkpoint each
-            # consumer's plan re-ran the full window subtree — the whole
-            # batch exchanged and sorted twice per micro-batch (guide
-            # §1.2/§2.4; at production batch sizes that is a duplicated
-            # full-batch shuffle, the dominant per-trigger data movement)
+            novel = D.band_rows(
+                D.minhash_signatures(
+                    D.shingle(deduped, id_col=key, outer=True), id_col=key
+                ),
+                id_col=key,
+                nested=True,
+            )
+            # pin ONCE: the kept plan reads novel twice (fp gate, band
+            # probe), each of which would otherwise re-run the exchange,
+            # sort and shingle build (guide §1.2/§2.4)
             _tap_frame(novel, "qs17_novel")
             novel = novel.localCheckpoint(eager=True)
-            # bands of this batch's candidates (tiny: 4 rows/doc) —
-            # narrow from the pinned novel (no exchange), checkpointed so
-            # the hit probe and the index append don't re-run the
-            # shingle+minhash subtree
-            bands = D.band_rows(
-                D.minhash_signatures(D.shingle(novel.select("doc_id", "text")))
-            ).localCheckpoint(eager=True)
-            # hit = exact fp in earlier-KEPT corpus OR any band bucket
-            # in earlier-KEPT band index (own-batch partitions excluded
-            # → replay-idempotent, per the qs12 round-5 advice fix).
-            # Two CHAINED anti-joins, not semi-joins→union→distinct→
-            # anti: novel is unique per fp (the window dedup above), so
-            # anti-joining away fp matches, then doc_ids with a band
-            # hit, drops exactly the old hit set — minus the union's
-            # distinct, a whole exchange+aggregate per micro-batch that
-            # existed only to dedup the overlap the anti-join semantics
-            # absorb for free (guide §2.4: remove shuffles outright).
+            # hit = exact fp OR any (band, sig) bucket of an earlier-KEPT
+            # doc, own-batch partition excluded (replay-idempotent, see
+            # qs12). Two CHAINED anti-joins, no union→distinct exchange:
+            # novel is unique per fp, so they drop exactly the hit set.
+            kept = novel
             if os.path.exists(corpus):
-                seen_fp = read_side(s, corpus, exclude=batch_id).select("fp")
-                seen_bands = read_side(s, bandidx, exclude=batch_id).select(
-                    "band", "sig"
+                seen = read_side(s, corpus, exclude=batch_id)
+                band_hits = novel.select("doc_id", F.inline("bands")).join(
+                    seen.select(F.inline("bands")), ["band", "sig"], "left_semi"
                 )
-                band_hits = bands.join(
-                    seen_bands, ["band", "sig"], "left_semi"
-                ).select("doc_id")
-                kept = novel.join(seen_fp, "fp", "left_anti").join(
-                    band_hits, "doc_id", "left_anti"
+                kept = (
+                    novel.join(seen.select("fp"), "fp", "left_anti")
+                    .join(band_hits.select("doc_id"), "doc_id", "left_anti")
+                    .select(novel.columns)
                 )
-            else:
-                kept = novel
-            # pin before the two appends (the re-list footgun of
-            # _novel: the first append extends the file source the
-            # second plan would re-list). Project to the three columns the appends
-            # read BEFORE pinning: text rides along only to feed the
-            # band build (already done, off the novel checkpoint), so
-            # materializing it here paid the batch's full text payload
-            # into block storage for nothing.
-            kept = kept.select("doc_id", "batch", "fp")
+            # one idempotent overwrite of the own batch's partition: its
+            # plan scans the corpus with that partition pruned, so the
+            # overwrite never deletes a file the plan reads
             _tap_frame(kept, "qs17_kept")
-            kept = kept.localCheckpoint(eager=True)
-
-            # the two side-table appends are independent idempotent
-            # overwrites of different tables off checkpointed frames:
-            # submit them concurrently (guide §2.6) — each thread
-            # publishes its OWN table's manifest generation after its
-            # write
-            def _w_corpus() -> None:
-                kept.select("doc_id", "batch", "fp").write.mode(
-                    "overwrite"
-                ).parquet(batch_dir(corpus, batch_id))
-                register_batch(corpus, batch_id)
-
-            def _w_bands() -> None:
-                bands.join(
-                    kept.select("doc_id"), "doc_id", "left_semi"
-                ).write.mode("overwrite").parquet(batch_dir(bandidx, batch_id))
-                register_batch(bandidx, batch_id)
-
-            _concurrent_actions(_w_corpus, _w_bands)
+            kept.write.mode("overwrite").parquet(batch_dir(corpus, batch_id))
+            register_batch(corpus, batch_id)
 
         _run_fold(spark, in_dir, docs, work, ingest)
         return read_side(spark, corpus).select("doc_id", "batch")

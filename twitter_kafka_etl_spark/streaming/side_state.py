@@ -2,10 +2,10 @@
 side-state tables.
 
 The id-range ingest folds (qs12–qs17) accumulate their cross-batch
-state — fingerprint indexes, shingle indexes, band indexes, sketch
-cells, kept corpora, monitor counts — as one hive partition
-``__b=<batch_id>`` per micro-batch (``batch_dir``; the folds never spell
-the name themselves), because per-batch OVERWRITE partitions are what makes
+state — fingerprint indexes, shingle indexes, sketch cells, kept
+corpora (qs17's with their MinHash bands inline), monitor counts — as
+one hive partition ``__b=<batch_id>`` per micro-batch (``batch_dir``;
+the folds never spell the name themselves), because per-batch OVERWRITE partitions are what makes
 the folds replay-idempotent under foreachBatch's at-least-once delivery
 (each table's write lands outside the checkpoint transaction; see
 queries.py's qs12 ingest comment). The r11 100-batch probe isolated the
@@ -59,7 +59,7 @@ once), and a snapshot never absorbs rows the checkpoint might
 re-deliver.
 
 Call discipline: inline compaction is for tables the fold READS every
-batch (the fingerprint/shingle/band indexes and the kept corpora whose
+batch (the fingerprint/shingle indexes and the kept corpora whose
 listing cost lands on every micro-batch's plan) plus bounded-size
 merge-collapsible state (qs15's count-min cells). A write-only landed
 layer (qs15's raw events) gets NOTHING from an inline fold — no batch
